@@ -74,16 +74,23 @@ def exhaustive_topk(
     avg_dl: float | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
+    n_docs: int | None = None,
+    df: dict[str, int] | None = None,
 ) -> list[tuple[int, float]]:
     """Reference scorer: plain-Python exhaustive BM25 with the engine's
-    summation order (sorted terms) and tie-break."""
-    n_docs = len(corpus)
+    summation order (sorted terms) and tie-break. ``n_docs`` / ``df``
+    (term → df) override the corpus's own stats, as global stats do for
+    one shard of a larger corpus."""
+    if n_docs is None:
+        n_docs = len(corpus)
     if avg_dl is None:
-        avg_dl = sum(dls.values()) / n_docs
+        avg_dl = sum(dls.values()) / len(corpus)
     qterms = sorted(set(query_terms))
     dfs = {
         t: sum(1 for d in corpus.values() if t in d) for t in qterms
     }
+    if df:
+        dfs.update((t, df[t]) for t in qterms if t in df)
     out = []
     for doc_id, terms in corpus.items():
         score = 0.0

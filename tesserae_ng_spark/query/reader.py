@@ -104,7 +104,7 @@ class TermPostings:
     expression, and WAND block-skips are a searchsorted over ``blk_last``.
     """
 
-    # no __slots__: scorers attach per-term caches (_rows_scores) and
+    # no __slots__: scorers attach per-term caches (_impact) and
     # tests monkeypatch methods; the instance dict is per TERM (not per
     # block), so its cost is negligible
 
@@ -428,6 +428,9 @@ class IndexReader:
         self._term_cache_size = term_cache_size
         with open(os.path.join(index_dir, "stats.json")) as f:
             self.stats = json.load(f)
+            # which build this reader serves (get_searcher drops a cached
+            # searcher once the index is rebuilt in place)
+            self.stats_mtime_ns = os.fstat(f.fileno()).st_mtime_ns
         self.n_docs = self.stats["n_docs"]
         self.avg_dl = self.stats["avg_dl"]
         self.n_buckets = self.stats["n_buckets"]
@@ -815,21 +818,6 @@ class IndexReader:
         # hundreds of terms (VERDICT r3 #5)
         by_term = {tp.term: tp for tp in need}
         self._attach_payloads_multi(by_term, tbl, with_positions)
-
-    def global_doc_ids(self):
-        """Sorted array of every doc_id in the index (lazy, cached).
-
-        Backs the dense global-accumulator scorer: term postings map once
-        to global row numbers, then every query is one scatter-add per
-        term. 8 bytes/doc — fine to ~100M docs per query node; beyond
-        that, shard the index (batch mode already runs per-shard)."""
-        if getattr(self, "_global_docs", None) is None:
-            import numpy as np
-
-            d = ds.dataset(self.docs_path())
-            arr = d.to_table(columns=["doc_id"]).column("doc_id").to_numpy()
-            self._global_docs = np.sort(arr)
-        return self._global_docs
 
     def docs_path(self) -> str:
         p = os.path.join(self.index_dir, "docs")

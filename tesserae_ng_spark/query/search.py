@@ -2,9 +2,9 @@
 
 Single-query path (SURVEY.md §3.2): runs fully in-process — analyze the
 query with the SAME chain used at index time (plain-Python functions),
-pyarrow-fetch the terms' dictionary rows + posting blocks, run block-max
-WAND. No Spark session needed (the reference's always-warm Solr core
-analog). Batch path: distribute queries over executors; each executor
+pyarrow-fetch the terms' dictionary rows + posting blocks, score with an
+exact BM25 scorer (query/wand.py). No Spark session needed (the
+reference's always-warm Solr core analog). Batch path: distribute queries over executors; each executor
 opens the same index (local FS here, object store at scale) — queries are
 embarrassingly parallel once the index is immutable.
 
@@ -31,23 +31,16 @@ import numpy as np
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.reader import IndexReader, TermPostings
 from tesserae_ng_spark.query.wand import (
-    BATCH_ACC_MAX_CELLS,
     StatsFreeBoundsUnavailable,
-    bm25_batch_global_topk,
-    bm25_dense_topk,
     bm25_global_topk,
     wand_topk,
 )
 from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 
-# per-node cap for the dense global accumulator (8B/doc); larger indexes
-# are sharded across executors in batch mode anyway
-GLOBAL_ACC_MAX_DOCS = 100_000_000
-
-# below this many total postings, vectorized exhaustive scoring beats the
-# skip-capable doc-at-a-time loop: selective (low-df) queries are small
-# enough to score outright, while huge head-term unions are exactly where
-# block-max skipping pays. ~16M postings ≈ the numpy/WAND crossover here.
+# below this many total postings, vectorized exact scoring (the threshold
+# kernel) beats the skip-capable doc-at-a-time loop, while huge head-term
+# unions are exactly where block-max skipping pays. ~16M postings ≈ the
+# numpy/WAND crossover measured with the dense scorers the kernel replaced.
 DENSE_POSTINGS_CUTOFF = 1 << 24
 
 # batch prefetch loads payload bytes eagerly only for terms up to this df;
@@ -103,42 +96,34 @@ class Searcher:
                 n_docs = self.reader.n_docs
                 avg_dl = self.reader.avg_dl
                 dfo = None
-            # three exhaustive-equivalent scorers, picked by shape:
-            # - block-max WAND: huge unions where skipping pays. Under
-            #   overridden (sharded/global) stats it runs on stats-free
-            #   bounds recomputed from per-block (max_tf, min_dl); a pre-v2
-            #   index without that metadata falls through to exhaustive.
-            # - global accumulator: dense postings + index fits a per-node
-            #   row map (scatter-add per term, per-term work cached)
-            # - vectorized dense: small posting unions, no global map
-            total_postings = sum(tp.df for tp in fetched.values())
+            # two exhaustive-equivalent scorers (query/wand.py), picked by
+            # the query's total postings:
+            # - above DENSE_POSTINGS_CUTOFF, block-max WAND: huge unions
+            #   where skipping pays. Under overridden (sharded/global)
+            #   stats it runs on stats-free bounds recomputed from
+            #   per-block (max_tf, min_dl); a pre-v2 index without that
+            #   metadata raises StatsFreeBoundsUnavailable and falls
+            #   through to the kernel below.
+            # - otherwise the threshold kernel (bm25_global_topk): per-term
+            #   impact-ordered scores, cached per stats key; it scores the
+            #   union of every term's top-m docs and deepens m ×4 until
+            #   the k-th score is strictly above the fold of the lists'
+            #   depth-m scores, which no unread doc can reach.
             top = None
-            if total_postings > DENSE_POSTINGS_CUTOFF:
+            if sum(tp.df for tp in fetched.values()) > DENSE_POSTINGS_CUTOFF:
                 try:
                     top = wand_topk(
                         fetched, n_docs, avg_dl, k, df_override=dfo
                     )
                 except StatsFreeBoundsUnavailable:
-                    top = None  # old index + overridden stats → exhaustive
+                    top = None  # old index + overridden stats → kernel
             if top is None:
-                # exhaustive scorers decode every block — bulk-load all
-                # payloads in one scan instead of one scan per term.
-                # Selective (tail) queries score over the posting UNION
-                # (dense path): the global accumulator's O(n_docs) zero +
-                # nonzero sweep per query dwarfs a few thousand postings.
+                # the kernel decodes every block on a cache miss —
+                # bulk-load all payloads in one scan, not one per term
                 self.reader.ensure_payloads(fetched.values())
-                if (
-                    self.reader.n_docs <= GLOBAL_ACC_MAX_DOCS
-                    and total_postings * 8 > self.reader.n_docs
-                ):
-                    top = bm25_global_topk(
-                        fetched, self.reader.global_doc_ids(),
-                        n_docs, avg_dl, k, df_override=dfo,
-                    )
-                else:
-                    top = bm25_dense_topk(
-                        fetched, n_docs, avg_dl, k, df_override=dfo
-                    )
+                top = bm25_global_topk(
+                    fetched, n_docs, avg_dl, k, df_override=dfo
+                )
         elif mode == "phrase":
             ordered = [fetched[t] for t in terms if t in fetched]
             if len(ordered) < len(terms):
@@ -573,83 +558,14 @@ def get_searcher(index_dir: str, lang: str = "en") -> "Searcher":
     whole batch instead of being rebuilt per task. Keyed by (dir, lang) so
     a non-en deployment gets a searcher whose analysis chain matches the
     index (the reader/dataset handles are per-searcher; two langs over one
-    dir is a test-only shape, not worth sharing the reader)."""
+    dir is a test-only shape, not worth sharing the reader). An entry is
+    replaced when the dir's stats.json mtime changes: an index rebuilt in
+    place must not keep serving the old dfs and per-term caches."""
+    mtime = os.stat(os.path.join(index_dir, "stats.json")).st_mtime_ns
     s = _SEARCHER_CACHE.get((index_dir, lang))
-    if s is None:
+    if s is None or s.reader.stats_mtime_ns != mtime:
         s = _SEARCHER_CACHE[(index_dir, lang)] = Searcher(index_dir, lang)
     return s
-
-
-# the term-at-a-time batch scorer needs enough queries to amortize its
-# per-term passes, and a chunk tall enough that the 2D scatter beats
-# per-query accumulators; below either bound the per-query scorers (which
-# can also WAND-skip on huge indexes) stay the better plan
-BATCH_MIN_QUERIES = 4
-BATCH_MIN_CHUNK = 8
-
-
-def _use_batch_scorer() -> bool:
-    """Opt-in switch for the term-at-a-time batch scorer in the batch /
-    sharded executors. Default OFF — measured on the production query mix
-    (enriched Zipf vocabulary, 2000 queries vs a 60k-doc shard, 8
-    concurrent worker processes): per-query ADAPTIVE dispatch (tail
-    queries → small dense-union scorer, head queries → global
-    accumulator) runs the task in 3.3 s where the always-dense batch
-    scorer takes 22 s, because the batch path pays O(n_docs) accumulator
-    traffic for every query while ~90% of real queries touch only a few
-    thousand postings — and memory traffic is exactly what contended
-    workers fight over. The batch scorer wins only on head-term-heavy
-    workloads whose rows are dense anyway (it measured ~15% faster there);
-    results are bit-identical either way (hypothesis-pinned)."""
-    import os
-
-    return os.environ.get("TNG_BATCH_SCORER", "").strip().lower() in (
-        "1", "true", "yes", "on",
-    )
-
-
-def batch_bm25_hits(
-    searcher: "Searcher",
-    qs: list[dict],
-    default_k: int,
-    global_stats: dict | None = None,
-) -> list[list[Hit]] | None:
-    """Term-at-a-time batch scoring of a slice's bm25 queries (VERDICT r3
-    #1) → per-query Hit lists aligned with ``qs``, bit-identical to
-    per-query ``searcher.search``. Returns None when the shape doesn't fit
-    the batch plan (few queries, or an index too large for a dense
-    accumulator chunk) — callers fall back to the per-query path."""
-    nd = searcher.reader.n_docs
-    if (
-        len(qs) < BATCH_MIN_QUERIES
-        or nd > GLOBAL_ACC_MAX_DOCS
-        or BATCH_ACC_MAX_CELLS // max(nd, 1) < BATCH_MIN_CHUNK
-    ):
-        return None
-    if global_stats is not None:
-        n_docs = global_stats["n_docs"]
-        avg_dl = global_stats["avg_dl"]
-        dfo = global_stats.get("df") or {}
-    else:
-        n_docs = searcher.reader.n_docs
-        avg_dl = searcher.reader.avg_dl
-        dfo = None
-    qterms = [analyze_query(q["query_text"], searcher.lang) for q in qs]
-    all_terms = sorted({t for ts in qterms for t in ts})
-    fetched = searcher.reader.fetch(all_terms) if all_terms else {}
-    if fetched:
-        # exhaustive batch decodes every used block anyway → one bulk
-        # payload scan, no df cap (ids/tfs/dls only — never positions)
-        searcher.reader.ensure_payloads(fetched.values())
-    ks = [int(q.get("k", default_k)) for q in qs]
-    topks = bm25_batch_global_topk(
-        fetched, qterms, ks, searcher.reader.global_doc_ids(),
-        n_docs, avg_dl, df_override=dfo,
-    )
-    return [
-        [Hit(rank=i + 1, doc_id=d, score=s) for i, (d, s) in enumerate(top)]
-        for top in topks
-    ]
 
 
 # minimum queries per slice in batch mode: below this, extra workers cost
@@ -749,7 +665,6 @@ def search_batch(
     queries: list[dict],
     k: int = 10,
     lang: str = "en",
-    use_batch_scorer: bool | None = None,
 ):
     """Run many queries distributed: each executor opens the immutable index
     and serves its partition of queries (broadcast-free — queries are data,
@@ -796,49 +711,27 @@ def search_batch(
         _t0 = _time.time()
         searcher = get_searcher(index_dir, lang)
         _t["open_s"] = _time.time() - _t0
-        bm25_qs = [q for q in qs if q.get("mode", "bm25") == "bm25"]
-        other_qs = [q for q in qs if q.get("mode", "bm25") != "bm25"]
-        done = set()
-        batch_on = (
-            _use_batch_scorer()
-            if use_batch_scorer is None
-            else bool(use_batch_scorer)
-        )
-        if bm25_qs and batch_on:
-            # opt-in term-at-a-time batch scoring (see _use_batch_scorer
-            # for why per-query adaptive dispatch is the default). The
-            # explicit parameter rides the task closure, so it works from
-            # a test/driver without needing the env var to reach executor
-            # python workers (ADVICE r4 #2).
-            hits_per_q = batch_bm25_hits(searcher, bm25_qs, k)
-            if hits_per_q is not None:
-                for q, hits in zip(bm25_qs, hits_per_q):
-                    done.add(id(q))
-                    for hit in hits:
-                        yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
-        rest = other_qs + [q for q in bm25_qs if id(q) not in done]
-        if rest:
-            terms: set[str] = set()
-            for q in rest:
-                terms.update(analyze_query(q["query_text"], searcher.lang))
-            if terms:
-                # one metadata scan + one payload scan for the rest (union
-                # of their terms); head terms past PREFETCH_MAX_DF stay
-                # lazy so WAND can skip their blocks without the I/O having
-                # happened. Positions are never prefetched — positional
-                # queries load them candidate-only
-                # (TermPostings.candidate_positions).
-                _t0 = _time.time()
-                fetched = searcher.reader.fetch(sorted(terms))
-                _t["fetch_s"] = _time.time() - _t0
-                _t0 = _time.time()
-                searcher.reader.ensure_payloads(
-                    fetched.values(), max_df=PREFETCH_MAX_DF
-                )
-                _t["payloads_s"] = _time.time() - _t0
+        terms: set[str] = set()
+        for q in qs:
+            terms.update(analyze_query(q["query_text"], searcher.lang))
+        if terms:
+            # one metadata scan + one payload scan for the slice (union
+            # of its terms); head terms past PREFETCH_MAX_DF stay
+            # lazy so WAND can skip their blocks without the I/O having
+            # happened. Positions are never prefetched — positional
+            # queries load them candidate-only
+            # (TermPostings.candidate_positions).
+            _t0 = _time.time()
+            fetched = searcher.reader.fetch(sorted(terms))
+            _t["fetch_s"] = _time.time() - _t0
+            _t0 = _time.time()
+            searcher.reader.ensure_payloads(
+                fetched.values(), max_df=PREFETCH_MAX_DF
+            )
+            _t["payloads_s"] = _time.time() - _t0
         _t0 = _time.time()
         _qtimes = []
-        for q in rest:
+        for q in qs:
             _q0 = _time.time()
             for hit in searcher.search(
                 q["query_text"], k=q.get("k", k), mode=q.get("mode", "bm25"),

@@ -10,9 +10,10 @@ shape (public Solr semantics — the reference's deployment model):
     per-term df (shards partition docs disjointly, so sums are exact).
   phase 2 (distributed): every (shard × query-slice) task scores its shard
     with the GLOBAL stats so scores are comparable across shards; per-shard
-    top-k candidates flow back. bm25 runs block-max WAND on stats-free
-    bounds (TermIterator recomputes per-block bounds from max_tf/min_dl
-    under the global stats).
+    top-k candidates flow back. bm25 runs Searcher.search's scorer policy
+    under the global stats (block-max WAND recomputes per-block bounds
+    from max_tf/min_dl; the threshold kernel caches impact orders per
+    stats key).
   merge: per query, rank candidates by (score desc, doc_id asc) and keep
     k — rank-identical to a single index over the union of the shards
     (pinned by tests/test_sharded.py for bm25 AND phrase AND proximity).
@@ -51,7 +52,7 @@ import numpy as np
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.search import (
     MIN_QUERIES_PER_SLICE,
-    batch_bm25_hits,
+    PREFETCH_MAX_DF,
     get_searcher,
     phrase_match_arrays,
     proximity_match_arrays,
@@ -310,7 +311,6 @@ def search_sharded(
     queries: list[dict],
     k: int = 10,
     lang: str = "en",
-    use_batch_scorer: bool | None = None,
 ):
     """Distributed bm25/phrase/proximity over sharded indexes → DataFrame
     (query_id, rank, doc_id, score), rank-identical to a single union
@@ -345,44 +345,18 @@ def search_sharded(
         index_dir, qs = task
         searcher = get_searcher(index_dir, lang)
         gs = stats_bc.value
-        bm25_qs = [q for q in qs if q.get("mode", "bm25") == "bm25"]
-        other_qs = [q for q in qs if q.get("mode", "bm25") != "bm25"]
-        done = set()
-        from tesserae_ng_spark.query.search import _use_batch_scorer
-
-        batch_on = (
-            _use_batch_scorer()
-            if use_batch_scorer is None
-            else bool(use_batch_scorer)
-        )
-        if bm25_qs and batch_on:
-            # opt-in term-at-a-time batch scoring under the GLOBAL stats
-            # (VERDICT r3 #1 — implemented, measured, and left opt-in:
-            # per-query ADAPTIVE dispatch moves ~10× fewer bytes on the
-            # realistic Zipf query mix and scales far better across
-            # contended workers; see search._use_batch_scorer)
-            hits_per_q = batch_bm25_hits(searcher, bm25_qs, k, global_stats=gs)
-            if hits_per_q is not None:
-                for q, hits in zip(bm25_qs, hits_per_q):
-                    done.add(id(q))
-                    for h in hits:
-                        yield (q["query_id"], _CAND, h.doc_id, h.score)
-        rest = other_qs + [q for q in bm25_qs if id(q) not in done]
-        if rest:
-            terms: set[str] = set()
-            for q in rest:
-                terms.update(analyze_query(q["query_text"], searcher.lang))
-            if terms:
-                # one metadata + one payload scan for the rest (lazy above
-                # the prefetch df cap; positions load candidate-only —
-                # same shape as search_batch)
-                fetched = searcher.reader.fetch(sorted(terms))
-                from tesserae_ng_spark.query.search import PREFETCH_MAX_DF
-
-                searcher.reader.ensure_payloads(
-                    fetched.values(), max_df=PREFETCH_MAX_DF
-                )
-        for q in rest:
+        terms: set[str] = set()
+        for q in qs:
+            terms.update(analyze_query(q["query_text"], searcher.lang))
+        if terms:
+            # one metadata + one payload scan for the task's query terms
+            # (lazy above the prefetch df cap; positions load
+            # candidate-only — same shape as search_batch)
+            fetched = searcher.reader.fetch(sorted(terms))
+            searcher.reader.ensure_payloads(
+                fetched.values(), max_df=PREFETCH_MAX_DF
+            )
+        for q in qs:
             yield from _shard_query_rows(searcher, q, gs, k)
 
     # associative per-query top-k merge (reduceByKey): each task packs ONE

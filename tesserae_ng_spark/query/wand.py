@@ -1,15 +1,28 @@
-"""Block-max WAND top-k over compressed postings (SURVEY.md §2.11).
+"""Exact BM25 top-k: block-max WAND plus a threshold-algorithm kernel.
 
-Algorithm: Broder et al. CIKM'03 (WAND) + Ding & Suel SIGIR'11 (block-max
-refinement). Lucene 4 — the reference's engine — had neither; BMW is a
-contract requirement (BASELINE.json north_star); Lucene 8+ adopted the
-same algorithm, so its public semantics are the behavioral target.
+Two scorers, one contract — EXHAUSTIVE-EQUIVALENT top-k: identical
+(doc_id, score) lists, including the deterministic tie-break (score desc,
+doc_id asc), property-tested against the plain-Python reference
+``index.inmem.exhaustive_topk`` (tests/test_wand.py). Every doc's score is
+the fold of its per-term partials from 0.0 in sorted-term order, so both
+scorers produce the same floats. The policy (query.search.Searcher.search)
+picks by the query's total postings:
 
-Guarantee: EXHAUSTIVE-EQUIVALENT top-k — identical (doc_id, score) lists,
-including the deterministic tie-break (score desc, doc_id asc) — property-
-tested against the pure-DataFrame oracle (tests/test_wand.py).
+- above ``DENSE_POSTINGS_CUTOFF``: ``wand_topk`` — block-max WAND (Broder
+  et al. CIKM'03 + Ding & Suel SIGIR'11), doc-at-a-time, skipping whole
+  blocks on metadata where huge head-term unions make skipping pay. Lucene
+  8+ runs the same algorithm, so its public semantics are the behavioral
+  target.
+- otherwise, and when WAND has no valid bounds
+  (StatsFreeBoundsUnavailable): ``bm25_global_topk`` — Fagin's threshold
+  algorithm, vectorized per round, over per-term postings cached in impact
+  order. It reads the top-m of every list, scores that candidate union
+  exactly, and stops once the k-th score is strictly above the fold U of
+  the lists' scores at depth m; else m ×= 4. No doc outside the candidates
+  can reach U (float addition is monotone), and the strict ``>`` keeps
+  doc_id ties exact.
 
-Pruning discipline for exactness:
+WAND's pruning discipline for exactness:
 - prune only when upper_bound < threshold - EPS (never on ==): a candidate
   tying the heap minimum may still win the doc_id tie-break;
 - EPS absorbs float-addition rounding between the bound sum and the real
@@ -276,24 +289,26 @@ def wand_topk(
     return [(-negid, s) for (s, negid) in out]
 
 
-def term_rows_scores(
+def impact_ordered(
     tp,
-    global_docs: np.ndarray,
     n_docs: int,
     avg_dl: float,
     df_t: int,
     k1: float = BM25_K1,
     b: float = BM25_B,
-) -> tuple[np.ndarray, np.ndarray]:
-    """One term's (global_row, bm25 score) arrays under the given stats,
-    cached on the TermPostings (the index is immutable — Lucene-query-cache
-    style). The small per-stats-key LRU lets a node serving BOTH
-    shard-local and global-stats (sharded) traffic keep one entry per key
-    instead of thrashing a single slot every alternation."""
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One term's (ids, scores, order) under the given stats: ``ids`` and
+    ``scores`` in doc-id order (ids are decode_full's own cached array),
+    ``order`` the int32 impact permutation — score desc, doc_id asc.
+
+    Cached on the TermPostings (the index is immutable). The small
+    per-stats-key LRU lets a node serving BOTH shard-local and
+    global-stats (sharded) traffic keep one entry per key instead of
+    thrashing a single slot every alternation."""
     stats_key = (n_docs, avg_dl, df_t, k1, b)
-    cache = getattr(tp, "_rows_scores", None)
+    cache = getattr(tp, "_impact", None)
     if cache is None:
-        cache = tp._rows_scores = {}
+        cache = tp._impact = {}
     cached = cache.get(stats_key)
     if cached is not None:
         # LRU refresh: re-insert so eviction removes the stalest key
@@ -302,76 +317,28 @@ def term_rows_scores(
     ids, tfs, dls, _, _ = tp.decode_full()
     idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
     scores = idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl))
-    rows = np.searchsorted(global_docs, ids)
-    if global_docs.size <= np.iinfo(np.int32).max:
-        # int32 row indices (r7): exact for any per-node index (row <
-        # n_docs < 2^31), and the cached (rows, scores) pair is the
-        # scorer's per-worker hot set — 16 → 12 B/posting shrinks the
-        # freshly-touched pages the batch path re-faults in degraded
-        # windows. numpy fancy-indexing accepts int32 unchanged.
-        rows = rows.astype(np.int32)
-    # validate the mapping once per term: if the docs table and the
-    # postings drifted (stale-shard merge, docs read from a different
-    # build), searchsorted would scatter scores into the WRONG doc rows
-    # silently — fail loudly instead.
-    if rows.size and (
-        int(rows.max()) >= global_docs.size
-        or not np.array_equal(global_docs[rows], ids)
-    ):
-        raise RuntimeError(
-            f"postings/docs drift: term {tp.term!r} has doc ids "
-            "absent from the docs table — index dirs out of sync"
-        )
+    # ids ascend, so a stable sort on -score breaks ties by doc_id asc
+    order = np.argsort(-scores, kind="stable").astype(np.int32)
     if len(cache) >= 4:  # bounded: stats keys are few and stable
         cache.pop(next(iter(cache)))  # evict LRU entry only
-    cache[stats_key] = (rows, scores)
-    return rows, scores
+    cache[stats_key] = (ids, scores, order)
+    return ids, scores, order
 
 
-def dense_row_topk(
-    acc: np.ndarray, global_docs: np.ndarray, k: int
-) -> list[tuple[int, float]]:
-    """Tie-safe top-k extraction from one dense accumulator row →
-    [(doc_id, score)] by (score desc, doc_id asc). Matched docs are exactly
-    the nonzero entries (bm25 partials are strictly positive).
-
-    Tie handling never sorts the full hit set: argpartition over the hits
-    yields the true k-th score (the k largest VALUES are exact; only their
-    doc-id tie-break may be wrong), so the exact top-k is recoverable by
-    ordering just the docs with score ≥ kth — typically k plus one tie
-    group. The old full-hit lexsort fallback fired on ~90% of queries on
-    corpora with duplicated docs (score runs ⇒ kth almost always tied) and
-    was the dominant per-query cost at head-term hit counts."""
-    hit = np.nonzero(acc)[0]
-    if hit.size == 0:
-        return []
-    if hit.size <= k:
-        top = hit[np.lexsort((hit, -acc[hit]))]
-        return [(int(global_docs[i]), float(acc[i])) for i in top]
-    sub = acc[hit]
-    if hit.size > 2 * k:
-        # ascending partition at size-k: tail 2k ⊇ the k largest values
-        # (no -sub negation pass over the full hit set)
-        part = hit[np.argpartition(sub, hit.size - k)[hit.size - 2 * k :]]
-    else:
-        part = hit
-    order = np.lexsort((part, -acc[part]))
-    cand = part[order][:k]
-    kth = acc[cand[-1]]
-    ge = acc >= kth
-    if np.count_nonzero(ge) > cand.size:
-        # k-th score is tied beyond the partition head: the exact top-k is
-        # (all docs > kth) + (smallest doc_ids among the kth ties) — all
-        # inside {score ≥ kth}, a small set ordered exactly
-        idx = np.nonzero(ge)[0]
-        order = np.lexsort((idx, -acc[idx]))[:k]
-        cand = idx[order]
-    return [(int(global_docs[i]), float(acc[i])) for i in cand]
+def _top_k(ids: np.ndarray, scores: np.ndarray, k: int):
+    """(score desc, doc_id asc) top-k of parallel arrays. A partition finds
+    the exact k-th largest score; only the docs at or above it are
+    sorted (every tie at the k-th score is kept for the doc_id cut)."""
+    n = ids.size
+    if n > k:
+        keep = scores >= np.partition(scores, n - k)[n - k]
+        ids, scores = ids[keep], scores[keep]
+    top = np.lexsort((ids, -scores))[:k]
+    return ids[top], scores[top]
 
 
 def bm25_global_topk(
     term_postings: dict,
-    global_docs: np.ndarray,
     n_docs: int,
     avg_dl: float,
     k: int,
@@ -379,215 +346,54 @@ def bm25_global_topk(
     b: float = BM25_B,
     df_override: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Global-accumulator exhaustive BM25: per-term (global_row, score)
-    arrays are computed ONCE per term (term_rows_scores cache), then a
-    query is one scatter-add per term into a dense float array + arg-top-k.
+    """Exact BM25 top-k by Fagin's threshold algorithm over impact-ordered
+    postings (impact_ordered), vectorized per round.
 
-    Summation order per doc = sorted-term order (one add per term, in
-    term order) — identical float results to wand_topk / the oracle.
+    One term: the answer is the head of its impact order. Several terms:
+    candidates are the union of every term's top-m doc ids, each scored
+    exactly by folding its per-term scores from 0.0 in sorted-term order
+    (0.0 for a term it lacks — adding 0.0 is exact), the same float order
+    as wand_topk and the oracle. The bound U folds, in the same order,
+    each term's score at impact position m (0.0 when the list has no
+    position m). A doc outside the candidates sits at impact position ≥ m
+    in every list it is in, so each of its partials is ≤ that list's
+    bound term (partials are positive: idf > 0 whenever df ≤ n_docs, so
+    the 0.0 of a list the doc is absent from is below it too), and float
+    addition is monotone: its score is ≤ U. Stop when the k-th candidate
+    score is STRICTLY above U — no outside doc can reach or tie it, so the
+    doc_id tie-break stays exact — or when every list is used up;
+    otherwise m ×= 4. (While a list is left, it alone puts m ≥ 2k docs in
+    the candidates, so there is a k-th candidate to compare.)
 
     ``df_override`` maps term → GLOBAL df for sharded search (Solr
     distributed-IDF analog): scores become comparable across shards.
     """
-    acc = np.zeros(global_docs.size, dtype=np.float64)
+    lists = []
     for term in sorted(term_postings):
         tp = term_postings[term]
         if not tp.n_blocks:
             continue
         df_t = df_override.get(term, tp.df) if df_override else tp.df
-        rows, scores = term_rows_scores(
-            tp, global_docs, n_docs, avg_dl, df_t, k1, b
-        )
-        acc[rows] += scores  # rows are unique per term → plain fancy add
-    return dense_row_topk(acc, global_docs, k)
-
-
-# per-chunk accumulator budget for the batched scorer: chunk_rows × n_docs
-# float64 cells. 2^22 cells = 32 MiB — measured optimum: the chunk (plus
-# argpartition's index output of the same size) stays cache/TLB-friendly.
-# A 128 MiB chunk measured 8-10× SLOWER end-to-end on the same workload
-# (fill + scatter + 2D argpartition all go DRAM-bound), and several
-# executor python workers share one node's memory bandwidth.
-BATCH_ACC_MAX_CELLS = 1 << 22
-
-
-def bm25_batch_global_topk(
-    fetched: dict,
-    qterms: list[list[str]],
-    ks: list[int],
-    global_docs: np.ndarray,
-    n_docs: int,
-    avg_dl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    df_override: dict | None = None,
-) -> list[list[tuple[int, float]]]:
-    """Term-at-a-time batch BM25 (VERDICT r3 #1): score MANY queries
-    against one index in per-term passes instead of per-query loops.
-
-    For each term (sorted order), the per-term (rows, scores) arrays are
-    computed once, then added to every query containing the term with ONE
-    2D outer-indexed scatter ``acc[np.ix_(query_rows, rows)] += scores`` —
-    the sparse (queries × terms) · (terms × docs) product the batch is.
-    Queries chunk so the accumulator stays ≤ BATCH_ACC_MAX_CELLS.
-
-    EXHAUSTIVE-EQUIVALENT per query to bm25_global_topk bit-for-bit: each
-    query's doc sums accumulate in global sorted-term order (a subset of
-    the term passes), the same float-addition order as every other scorer,
-    and top-k extraction shares dense_row_topk.
-
-    ``qterms``: per-query term lists — only terms present in ``fetched``
-    with blocks contribute (absent terms live on other shards / nowhere).
-    """
-    nq = len(qterms)
-    out: list = [[] for _ in range(nq)]
-    if nq == 0 or global_docs.size == 0:
-        return out
-    term_q: dict[str, list[int]] = {}
-    for qi, ts in enumerate(qterms):
-        for t in set(ts):
-            tp = fetched.get(t)
-            if tp is not None and tp.n_blocks:
-                term_q.setdefault(t, []).append(qi)
-    if not term_q:
-        return out
-    terms_sorted = sorted(term_q)
-    chunk = max(1, min(nq, BATCH_ACC_MAX_CELLS // max(global_docs.size, 1)))
-    acc = np.zeros((min(chunk, nq), global_docs.size), dtype=np.float64)
-    for lo in range(0, nq, chunk):
-        hi = min(lo + chunk, nq)
-        acc[: hi - lo].fill(0.0)
-        for term in terms_sorted:
-            qis = [qi - lo for qi in term_q[term] if lo <= qi < hi]
-            if not qis:
-                continue
-            tp = fetched[term]
-            df_t = df_override.get(term, tp.df) if df_override else tp.df
-            rows, scores = term_rows_scores(
-                tp, global_docs, n_docs, avg_dl, df_t, k1, b
-            )
-            if len(qis) == 1:
-                acc[qis[0], rows] += scores
-            else:
-                acc[np.ix_(np.asarray(qis, dtype=np.int64), rows)] += scores
-        _chunk_topk(acc[: hi - lo], ks[lo:hi], global_docs, out, lo)
-    return out
-
-
-def _chunk_topk(
-    A: np.ndarray,
-    ks_sub: list[int],
-    global_docs: np.ndarray,
-    out: list,
-    base: int,
-) -> None:
-    """Top-k extraction for a whole accumulator chunk at once.
-
-    Per-row nonzero/argpartition/tie-check were ~85% of batch wall (each an
-    O(n_docs) numpy call per query). Instead: ONE 2D ascending argpartition
-    selects each row's top-C score columns (C = 2·max k — partitioning
-    ascending at nd−C avoids negating the chunk), then exact (score desc,
-    doc_id asc) ordering runs on ≤C candidates per row.
-
-    Exactness: if fewer than C candidates are positive, every matching doc
-    is inside the candidate set (top-C ⊇ all positives). If all C are
-    positive, docs outside can only TIE the partition boundary min(cs), so
-    kth > min(cs) proves the global top-k is inside; otherwise (ties reach
-    the boundary — rare) the row falls back to the exact full-row path.
-    Candidate column order == doc_id order (global_docs is sorted), so the
-    lexsort tie-break matches dense_row_topk bit-for-bit.
-    """
-    nrows, nd = A.shape
-    K = min(max(ks_sub), nd)
-    C = min(max(2 * K, K + 8), nd)
-    if C >= nd:
-        for j in range(nrows):
-            out[base + j] = dense_row_topk(A[j], global_docs, ks_sub[j])
-        return
-    cand = np.argpartition(A, nd - C, axis=1)[:, nd - C :]
-    cs = np.take_along_axis(A, cand, axis=1)
-    for j in range(nrows):
-        cj, sj = cand[j], cs[j]
-        pos = sj > 0.0
-        n_pos = int(np.count_nonzero(pos))
-        if n_pos == 0:
-            out[base + j] = []
-            continue
-        if n_pos < C:
-            cj, sj = cj[pos], sj[pos]
-        k = min(ks_sub[j], nd)
-        order = np.lexsort((cj, -sj))
-        top = order[:k]
-        kth = sj[top[-1]]
-        if n_pos >= C and not kth > sj[order[-1]] and k < C:
-            # k-th score ties the partition boundary, so docs outside the
-            # candidate set may tie it too. kth is still the TRUE k-th
-            # largest score (all C candidates ≥ every outside value), so
-            # the exact top-k is inside {score ≥ kth} — order just those.
-            row = A[j]
-            idx = np.nonzero(row >= kth)[0]
-            o2 = np.lexsort((idx, -row[idx]))[:k]
-            out[base + j] = [
-                (int(global_docs[i]), float(row[i])) for i in idx[o2]
-            ]
-            continue
-        out[base + j] = [
-            (int(global_docs[cj[i]]), float(sj[i])) for i in top
-        ]
-
-
-def bm25_dense_topk(
-    term_postings: dict,
-    n_docs: int,
-    avg_dl: float,
-    k: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    df_override: dict | None = None,
-) -> list[tuple[int, float]]:
-    """Vectorized exhaustive BM25 top-k — the dense-postings fast path.
-
-    WAND's doc-at-a-time Python loop wins when it can SKIP (selective
-    terms, huge N); with dense postings (head-term queries, small
-    vocabularies) it degenerates to visiting everything at ~1 µs/doc.
-    This path decodes whole blocks into numpy and scores every posting
-    vectorized (~50× faster when no skipping is possible).
-
-    EXHAUSTIVE-EQUIVALENT to wand_topk bit-for-bit: terms are accumulated
-    in sorted-term order (np.add.at is sequential and unbuffered), so each
-    doc's float-addition order matches WAND's full-score order.
-    """
-    ids_parts: list[np.ndarray] = []
-    score_parts: list[np.ndarray] = []
-    for term in sorted(term_postings):
-        tp = term_postings[term]
-        if not tp.n_blocks:
-            continue
-        df_t = df_override.get(term, tp.df) if df_override else tp.df
-        idf = math.log(1.0 + (n_docs - df_t + 0.5) / (df_t + 0.5))
-        ids, tfs, dls, _, _ = tp.decode_full()
-        ids_parts.append(ids)
-        score_parts.append(idf * tfs / (tfs + k1 * (1.0 - b + b * dls / avg_dl)))
-    if not ids_parts:
+        lists.append(impact_ordered(tp, n_docs, avg_dl, df_t, k1, b))
+    if not lists or k <= 0:
         return []
-    ids = np.concatenate(ids_parts)
-    sc = np.concatenate(score_parts)
-    uniq, inv = np.unique(ids, return_inverse=True)
-    acc = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(acc, inv, sc)
-    if uniq.size > k:
-        part = np.argpartition(-acc, k - 1)[: max(k * 4, k)]  # over-fetch for ties
-        # exact order among the partitioned head (+ a safe margin for ties
-        # at the boundary: re-partition wider until the cut is strict)
-        cand = part
-        order = np.lexsort((uniq[cand], -acc[cand]))
-        cand = cand[order][:k]
-        kth = acc[cand[-1]]
-        # docs outside the candidate head could tie kth and win on doc_id:
-        if np.count_nonzero(acc >= kth) > cand.size:
-            order = np.lexsort((uniq, -acc))[:k]
-            cand = order
-        top = cand
-    else:
-        top = np.lexsort((uniq, -acc))
-    return [(int(uniq[i]), float(acc[i])) for i in top[:k]]
+    if len(lists) == 1:
+        ids, scores, order = lists[0]
+        top = order[:k]
+        return [(int(d), float(s)) for d, s in zip(ids[top], scores[top])]
+    m = max(2 * k, 64)
+    while True:
+        cand = np.unique(np.concatenate([ids[o[:m]] for ids, _, o in lists]))
+        acc = np.zeros(cand.size, dtype=np.float64)
+        bound = 0.0
+        used_up = True
+        for ids, scores, order in lists:
+            pos = np.minimum(np.searchsorted(ids, cand), ids.size - 1)
+            acc += np.where(ids[pos] == cand, scores[pos], 0.0)
+            if m < ids.size:
+                bound += float(scores[order[m]])
+                used_up = False
+        top_ids, top_scores = _top_k(cand, acc, k)
+        if used_up or top_scores[-1] > bound:
+            return [(int(d), float(s)) for d, s in zip(top_ids, top_scores)]
+        m *= 4

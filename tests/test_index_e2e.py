@@ -153,7 +153,7 @@ def test_lazy_payload_skipped_blocks_never_read(index_dir, monkeypatch):
     is shrunk so the 28-block test term doesn't fit one window."""
     from tesserae_ng_spark.query import reader as reader_mod
     from tesserae_ng_spark.query.reader import IndexReader
-    from tesserae_ng_spark.query.wand import bm25_dense_topk, wand_topk
+    from tesserae_ng_spark.query.wand import bm25_global_topk, wand_topk
 
     monkeypatch.setattr(reader_mod, "PAYLOAD_SEGMENT_BLOCKS", 4)
     r = IndexReader(index_dir)
@@ -169,14 +169,15 @@ def test_lazy_payload_skipped_blocks_never_read(index_dir, monkeypatch):
         4:
     ].all(), "blocks beyond the landed segment were materialized"
 
-    # WAND through the lazy reader == dense through an eager reader
+    # WAND through the lazy reader == the threshold kernel (pinned to the
+    # plain-Python reference by tests/test_wand.py) through an eager reader
     fetched = r.fetch(["the", "window"])
     got = wand_topk(fetched, r.n_docs, r.avg_dl, 3)
     r2 = IndexReader(index_dir)
     f2 = r2.fetch(["the", "window"])
     r2.ensure_payloads(f2.values())
     assert not f2["the"]._ids_miss[0]
-    assert got == bm25_dense_topk(f2, r2.n_docs, r2.avg_dl, 3)
+    assert got == bm25_global_topk(f2, r2.n_docs, r2.avg_dl, 3)
 
 
 def test_payload_scan_selection_is_tight(index_dir, monkeypatch):
@@ -349,3 +350,29 @@ def test_warm_top_terms_arrow_fallback_same_selection(index_dir):
     top = max(pinned._dict_cache.values(), key=lambda r: (r["df"], r["term"]))
     assert fallback.warm_top_terms(1e-9)["terms"] == 1
     assert fallback.lookup([top["term"]])  # and it is fetchable
+
+
+def test_get_searcher_replaces_rebuilt_index(index_dir, tmp_path):
+    """An index rebuilt in place (stats.json rewritten) must not keep being
+    served by the per-process searcher cache with the old stats."""
+    import json
+    import shutil
+
+    from tesserae_ng_spark.query.search import get_searcher
+
+    d = str(tmp_path / "idx")
+    shutil.copytree(index_dir, d)
+    old = get_searcher(d)
+    assert get_searcher(d) is old
+    path = os.path.join(d, "stats.json")
+    with open(path) as f:
+        st = json.load(f)
+    st["n_docs"] += 7
+    with open(path, "w") as f:
+        json.dump(st, f)
+    # a coarse-mtime filesystem could keep the old stamp: move it forward
+    mt = os.stat(path).st_mtime_ns
+    os.utime(path, ns=(mt + 10**9, mt + 10**9))
+    new = get_searcher(d)
+    assert new is not old
+    assert new.reader.n_docs == old.reader.n_docs + 7

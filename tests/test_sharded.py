@@ -100,10 +100,11 @@ def test_sharded_phrase_proximity_rank_identical(spark, indexes):
 def test_sharded_wand_stats_free_matches_exhaustive(indexes):
     # the WAND engine itself under GLOBAL stats on real on-disk shard
     # postings: bounds recomputed from stored (max_tf, min_dl) must yield
-    # the same top-k as the exhaustive scorer under the same stats (tiny
-    # test indexes never cross DENSE_POSTINGS_CUTOFF, so pin it directly)
+    # the same top-k as the threshold kernel (pinned to the plain-Python
+    # reference by tests/test_wand.py) under the same stats (tiny test
+    # indexes never cross DENSE_POSTINGS_CUTOFF, so pin it directly)
     from tesserae_ng_spark.query.search import get_searcher
-    from tesserae_ng_spark.query.wand import bm25_dense_topk, wand_topk
+    from tesserae_ng_spark.query.wand import bm25_global_topk, wand_topk
 
     shard_dirs, _ = indexes
     terms = ["join", "hash", "scan"]
@@ -113,7 +114,7 @@ def test_sharded_wand_stats_free_matches_exhaustive(indexes):
         got = wand_topk(
             fetched, gs["n_docs"], gs["avg_dl"], 10, df_override=gs["df"]
         )
-        want = bm25_dense_topk(
+        want = bm25_global_topk(
             fetched, gs["n_docs"], gs["avg_dl"], 10, df_override=gs["df"]
         )
         assert got == want and len(got) == 10
@@ -214,61 +215,6 @@ def test_sharded_lang_threads_through(spark, corpus, tmp_path_factory):
     en_union = Searcher(union_dir)  # en analysis over the xx-built index
     assert union.search("joins", k=10) != en_union.search("joins", k=10) or \
         not union.search("joins", k=10)
-
-
-def test_batch_scorer_integration_identical(spark, indexes):
-    """ADVICE r4 #2: search_batch + search_sharded with the term-at-a-time
-    batch scorer forced ON must return results identical to the default
-    adaptive per-query path (done-set bookkeeping, global-stats override,
-    uncapped ensure_payloads, rank construction all exercised)."""
-    from tesserae_ng_spark.query.search import search_batch
-
-    shard_dirs, union_dir = indexes
-    queries = [
-        dict(query_id=i, query_text=qt, mode="bm25", k=10)
-        for i, qt in enumerate(
-            ["join", "hash scan", "sort merge join", "table hash",
-             "scan scan join", "zzmissing join"]
-        )
-    ] + [
-        dict(query_id=10, query_text="hash join", mode="phrase", k=10),
-        dict(query_id=11, query_text="sort merge", mode="proximity", k=10,
-             window=6),
-    ]
-
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 12))
-            for r in df.collect()
-        )
-
-    base_b = rows(search_batch(spark, union_dir, queries, k=10,
-                               use_batch_scorer=False))
-    got_b = rows(search_batch(spark, union_dir, queries, k=10,
-                              use_batch_scorer=True))
-    assert got_b == base_b
-    base_s = rows(search_sharded(spark, shard_dirs, queries, k=10,
-                                 use_batch_scorer=False))
-    got_s = rows(search_sharded(spark, shard_dirs, queries, k=10,
-                                use_batch_scorer=True))
-    assert got_s == base_s
-
-
-def test_batch_scorer_env_flag_parsing(monkeypatch):
-    """TNG_BATCH_SCORER env parsing (the `use_batch_scorer=None` default
-    resolves through this on each executor; the integration test above
-    forces the same branch via the explicit param because env mutations
-    in a live test session don't reach already-forked python workers)."""
-    from tesserae_ng_spark.query.search import _use_batch_scorer
-
-    for val, want in [
-        ("1", True), ("true", True), ("YES", True), (" on ", True),
-        ("0", False), ("off", False), ("", False), ("no", False),
-    ]:
-        monkeypatch.setenv("TNG_BATCH_SCORER", val)
-        assert _use_batch_scorer() is want, val
-    monkeypatch.delenv("TNG_BATCH_SCORER")
-    assert _use_batch_scorer() is False
 
 
 def test_prime_shard_workers_preserves_results(spark, indexes):

@@ -7,12 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from tesserae_ng_spark.index.inmem import build_term_postings, exhaustive_topk
-from tesserae_ng_spark.query.wand import (
-    bm25_batch_global_topk,
-    bm25_dense_topk,
-    bm25_global_topk,
-    wand_topk,
-)
+from tesserae_ng_spark.query.wand import bm25_global_topk, wand_topk
 
 
 def make_index(corpus, dls, block_size):
@@ -59,17 +54,9 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
     fetched = {t: tps[t] for t in set(query) if t in tps}
 
     want = exhaustive_topk(corpus, dls, query, k, avg_dl)
-    global_docs = np.array(sorted(corpus), dtype=np.int64)
     results = [
         ("wand", wand_topk(fetched, n_docs, avg_dl, k)),
-        ("dense", bm25_dense_topk(fetched, n_docs, avg_dl, k)),
-        ("global", bm25_global_topk(fetched, global_docs, n_docs, avg_dl, k)),
-        (
-            "batch",
-            bm25_batch_global_topk(
-                fetched, [query], [k], global_docs, n_docs, avg_dl
-            )[0],
-        ),
+        ("kernel", bm25_global_topk(fetched, n_docs, avg_dl, k)),
     ]
     for name, got in results:
         assert [d for d, _ in got] == [d for d, _ in want], name
@@ -77,50 +64,102 @@ def test_wand_equals_exhaustive(corpus, qsize, k, block_size, seed):
             assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (name, gd, gs, ws)
 
 
+def replicate(corpus, dup):
+    """``dup`` copies of every doc at consecutive ids: identical (tf, dl)
+    rows ⇒ every score appears ``dup`` times, so the k-th rank and the
+    threshold bound almost always sit inside a tie run."""
+    return {
+        i * dup + r: dict(corpus[d])
+        for i, d in enumerate(sorted(corpus))
+        for r in range(dup)
+    }
+
+
 @given(
     corpus=corpus_strategy,
-    nq=st.integers(min_value=1, max_value=12),
-    seed=st.integers(min_value=0, max_value=10_000),
     dup=st.integers(min_value=1, max_value=8),
+    qsize=st.integers(min_value=1, max_value=4),
+    k=st.sampled_from([1, 3, 10, 100]),
+    block_size=st.sampled_from([2, 4, 128]),
+    seed=st.integers(min_value=0, max_value=10_000),
+    global_stats=st.booleans(),
+    extra_docs=st.integers(min_value=0, max_value=10_000),
+    extra_df=st.integers(min_value=0, max_value=500),
+    dl_scale=st.floats(min_value=0.3, max_value=3.0),
 )
-@settings(max_examples=150, deadline=None)
-def test_batch_topk_equals_per_query(corpus, nq, seed, dup):
-    """Term-at-a-time batch scorer ≡ per-query global accumulator —
-    bit-identical docs AND scores, per-query k, including tie-heavy score
-    distributions (``dup`` replicas of every doc force score runs, the
-    _chunk_topk boundary-tie fallback's worst case)."""
+@settings(max_examples=300, deadline=None)
+def test_global_topk_equals_exhaustive(
+    corpus, dup, qsize, k, block_size, seed, global_stats, extra_docs,
+    extra_df, dl_scale,
+):
+    """Threshold kernel ≡ plain-Python exhaustive reference: the same doc
+    order and bit-identical scores, under the index's own stats and under
+    overridden (sharded/global) n_docs, avg_dl and df."""
+    rng = np.random.RandomState(seed)
+    vocab = [f"t{i}" for i in range(8)]
+    query = [vocab[i] for i in rng.choice(8, size=qsize, replace=False)]
+    big = replicate(corpus, dup)
+    dls = {d: sum(tfs.values()) for d, tfs in big.items()}
+    tps, n_docs, avg_dl = make_index(big, dls, block_size)
+    fetched = {t: tps[t] for t in set(query) if t in tps}
+    if global_stats:
+        g_n, g_avg = n_docs + extra_docs, avg_dl * dl_scale
+        dfo = {t: tp.df + min(extra_df, extra_docs) for t, tp in fetched.items()}
+        got = bm25_global_topk(fetched, g_n, g_avg, k, df_override=dfo)
+        want = exhaustive_topk(big, dls, query, k, g_avg, n_docs=g_n, df=dfo)
+    else:
+        got = bm25_global_topk(fetched, n_docs, avg_dl, k)
+        want = exhaustive_topk(big, dls, query, k, avg_dl)
+    assert got == want
+
+
+def test_global_topk_deepens_on_anticorrelated_terms(monkeypatch):
+    """Term a's impact order runs doc 0 → N, term b's runs N → 0, so the
+    best docs sit mid-list in both and enter the candidates only after
+    several ×4 deepenings (each threshold round extracts one candidate
+    top-k)."""
     import tesserae_ng_spark.query.wand as wand_mod
 
-    rng = np.random.RandomState(seed)
-    # replicate docs: identical (tf, dl) rows at distinct doc ids ⇒ every
-    # score appears `dup` times, so k-th almost always ties the boundary
-    big = {}
-    for i, d in enumerate(sorted(corpus)):
-        for r in range(dup):
-            big[i * dup + r] = dict(corpus[d])
-    dls = {d: sum(tfs.values()) for d, tfs in big.items()}
-    tps, n_docs, avg_dl = make_index(big, dls, 4)
-    global_docs = np.array(sorted(big), dtype=np.int64)
-    vocab = [f"t{i}" for i in range(8)]
-    qterms = [
-        [vocab[i] for i in rng.choice(8, size=rng.randint(1, 5), replace=False)]
-        for _ in range(nq)
-    ]
-    ks = [int(rng.choice([1, 3, 10, 100])) for _ in range(nq)]
-    fetched = {t: tp for t, tp in tps.items()}
-    # tiny chunk budget → several chunks even at toy sizes
-    old = wand_mod.BATCH_ACC_MAX_CELLS
-    wand_mod.BATCH_ACC_MAX_CELLS = max(len(big) * 2, 8)
-    try:
-        got = bm25_batch_global_topk(
-            fetched, qterms, ks, global_docs, n_docs, avg_dl
-        )
-    finally:
-        wand_mod.BATCH_ACC_MAX_CELLS = old
-    for i, terms in enumerate(qterms):
-        sub = {t: tps[t] for t in set(terms) if t in tps}
-        want = bm25_global_topk(sub, global_docs, n_docs, avg_dl, ks[i])
-        assert got[i] == want, (i, terms, ks[i])
+    n = 1200
+    corpus = {}
+    for d in range(n):
+        a, b = 1 + (n - 1 - d) // 8, 1 + d // 8
+        corpus[d] = {"a": a, "b": b, "z": 400 - a - b}  # constant dl
+    dls = {d: sum(t.values()) for d, t in corpus.items()}
+    tps, n_docs, avg_dl = make_index(corpus, dls, 16)
+    fetched = {t: tps[t] for t in ("a", "b")}
+    rounds = []
+    top_k = wand_mod._top_k
+    monkeypatch.setattr(
+        wand_mod, "_top_k", lambda *a: (rounds.append(1), top_k(*a))[1]
+    )
+    for k in (1, 3, 10, 100):
+        rounds.clear()
+        got = bm25_global_topk(fetched, n_docs, avg_dl, k)
+        assert got == exhaustive_topk(corpus, dls, ["a", "b"], k, avg_dl), k
+        assert len(rounds) >= (3 if k <= 10 else 2), (k, len(rounds))
+
+
+def test_global_topk_bound_is_the_depth_m_score():
+    """The best doc (x) sits at impact position exactly m = 64 in both
+    lists, just past the first round's candidates, and the first round's
+    best candidate scores between x and the lists' position-65 scores: a
+    bound read one position too deep would stop there and miss x."""
+    corpus = {0: {"a": 2, "b": 2}}  # x
+    for i in range(64):
+        corpus[100 + i] = {"a": 30}
+        corpus[200 + i] = {"b": 30}
+    for i in range(50):
+        corpus[300 + i] = {"a": 1}
+        corpus[400 + i] = {"b": 1}
+    for tfs in corpus.values():
+        tfs["z"] = 100 - sum(tfs.values())  # constant dl
+    dls = {d: 100 for d in corpus}
+    tps, n_docs, avg_dl = make_index(corpus, dls, 16)
+    fetched = {t: tps[t] for t in ("a", "b")}
+    got = bm25_global_topk(fetched, n_docs, avg_dl, 1)
+    assert got == exhaustive_topk(corpus, dls, ["a", "b"], 1, avg_dl)
+    assert got[0][0] == 0
 
 
 def test_wand_absent_and_empty():
@@ -169,7 +208,7 @@ def test_wand_stats_free_bounds_equal_exhaustive(
     g_n = n_docs + extra_docs
     g_avg = avg_dl * dl_scale
     dfo = {t: tp.df + min(extra_df, extra_docs) for t, tp in fetched.items()}
-    want = bm25_dense_topk(fetched, g_n, g_avg, k, df_override=dfo)
+    want = exhaustive_topk(corpus, dls, query, k, g_avg, n_docs=g_n, df=dfo)
     got = wand_topk(fetched, g_n, g_avg, k, df_override=dfo)
     assert [d for d, _ in got] == [d for d, _ in want]
     for (gd, gs), (wd, ws) in zip(got, want):
@@ -199,24 +238,23 @@ def test_global_topk_stats_cache_evicts_lru_only():
     dls = {d: sum(t.values()) for d, t in corpus.items()}
     tps, n, avg = make_index(corpus, dls, 8)
     tp = tps["a"]
-    global_docs = np.array(sorted(corpus), dtype=np.int64)
     misses = []
     orig = tp.decode_full
     tp.decode_full = lambda *a, **k: (misses.append(1), orig(*a, **k))[1]
 
     stats = [(n + i, avg + i) for i in range(5)]  # 5 distinct stats keys
     for nd, ad in stats[:4]:
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, nd, ad, 5)
     assert len(misses) == 4
     for nd, ad in stats[:4]:  # all four still cached
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, nd, ad, 5)
     assert len(misses) == 4
-    bm25_global_topk({"a": tp}, global_docs, *stats[4], 5)  # evicts stats[0]
+    bm25_global_topk({"a": tp}, *stats[4], 5)  # evicts stats[0]
     assert len(misses) == 5
     for nd, ad in stats[1:5]:  # survivors stay cached (clear() would miss)
-        bm25_global_topk({"a": tp}, global_docs, nd, ad, 5)
+        bm25_global_topk({"a": tp}, nd, ad, 5)
     assert len(misses) == 5
-    bm25_global_topk({"a": tp}, global_docs, *stats[0], 5)  # truly evicted
+    bm25_global_topk({"a": tp}, *stats[0], 5)  # truly evicted
     assert len(misses) == 6
 
 

@@ -388,8 +388,9 @@ def main():
         "pressure, idle executor threads) plus this host's documented",
         "window noise (protocol single_qps spread 22-30 at the 480k",
         "shape). The profile shows no anomalous stall: time splits",
-        "across bm25_global_topk, decode_full and dense_row_topk in the",
-        "expected proportions.",
+        "across the exhaustive BM25 scorer (then a dense accumulator plus",
+        "its top-k sweep, since replaced by the threshold kernel) and",
+        "decode_full in the expected proportions.",
         "",
         f"Pass criteria — single-run view: build-throughput efficiency ≥ 0.8 → "
         f"{'**PASS**' if build[2] >= 0.8 else '**FAIL**'} ({build[2]:.3f}); "
