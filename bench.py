@@ -85,26 +85,6 @@ def main():
     out_json["n_terms"] = res.n_terms
     out_json["n_blocks"] = res.n_blocks
 
-    # SPARK_GRAFT_BUILD_ONLY=1 (saturation probe, tools/saturation_probe.py):
-    # stop after the build so a concurrent memory-bandwidth probe can
-    # sample exactly the build window and the JSON line is build-only
-    if os.environ.get("SPARK_GRAFT_BUILD_ONLY") == "1":
-        print(
-            json.dumps(
-                {
-                    "metric": "index-build only",
-                    "value": round(timings["build_index"], 3),
-                    "unit": "sec",
-                    "queries": {"build_index": round(timings["build_index"], 3)},
-                    "sf": sf,
-                    "cpus": cpus,
-                    **out_json,
-                }
-            )
-        )
-        spark.stop()
-        return
-
     # --- query set ----------------------------------------------------------
     import duckdb
 
@@ -221,7 +201,7 @@ def main():
     out_json["n_shards"] = n_shards
     # first repeat WITHOUT priming — the old "warm" semantics, kept as
     # disclosure: its hit rate is a task→worker assignment lottery (Spark
-    # pools python workers with no affinity; tools/profile_sharded_warm.py
+    # pools python workers with no affinity; per-task worker traces
     # measured 0/8 cache hits on a "warm" local[8] pass and a 2x task-wall
     # spread on byte-identical code), which is what made the graded warm
     # row swing 0.625–0.833 across engine-identical protocol runs

@@ -5,12 +5,12 @@ schema round-trip PER GROUP. With a web-scale dictionary the build has
 10k–10M term groups per shard, and that fixed cost dominates the stage
 (measured: the sf0.1 merge spent ~25 of 30 s on group plumbing, not work).
 
-``grouped_map_sorted`` keeps the exact applyInPandas contract — ``fn``
-receives one pandas frame per complete key group — but runs it inside
-``mapInPandas`` over hash-partitioned, partition-sorted data: one Arrow
-batch carries MANY groups, group boundaries are found with numpy, and a
-group straddling two Arrow batches is carried over (partition-sorted data
-guarantees groups are contiguous and never span partitions).
+``grouped_arrow_sorted`` instead runs a batch function inside
+``mapInArrow`` over hash-partitioned, partition-sorted data: one Arrow
+batch carries MANY complete groups, group boundaries are found with
+numpy, and a group straddling two Arrow batches is carried over
+(partition-sorted data guarantees groups are contiguous and never span
+partitions).
 
 This is also exactly the SURVEY §2.11 `salted_repartition_sort` shape: the
 explicit repartition+sortWithinPartitions IS the physical exchange the
@@ -19,95 +19,10 @@ index build is specified to use.
 
 from __future__ import annotations
 
-import os
-import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-
-
-def _key_change(kv: pd.DataFrame) -> np.ndarray:
-    # null-safe row-to-previous-row comparison: pandas `!=` treats
-    # NaN != NaN as a change, which would split a null-key group into
-    # per-row "groups" — match groupBy semantics (nulls group together)
-    prev = kv.shift()
-    equal = ((kv == prev) | (kv.isna() & prev.isna())).all(axis=1)
-    change = (~equal).to_numpy()
-    change[0] = True
-    return change
-
-
-def _grouped_runner(
-    df: DataFrame,
-    keys: list[str],
-    emit: Callable[[pd.DataFrame], Iterator[pd.DataFrame]],
-    schema,
-    n_parts: int | None = None,
-    sort_extra: tuple = (),
-) -> DataFrame:
-    """Shared exchange + Arrow-batch carry machinery: hash-partition by
-    ``keys``, partition-sort by ``keys + sort_extra`` (JVM sort), then feed
-    ``emit`` frames whose trailing (possibly batch-straddling) key group
-    has been held back until complete."""
-    sc = df.sparkSession.sparkContext
-    rep = df.repartition(n_parts or sc.defaultParallelism, *keys)
-    rep = rep.sortWithinPartitions(*keys, *sort_extra)
-    key_list = list(keys)
-
-    def runner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            # hold back the trailing key group — it may continue in the
-            # next Arrow batch of this partition (null-safe, as in _key_change)
-            kv = pdf[key_list]
-            last = kv.iloc[-1]
-            tail_eq = ((kv == last) | (kv.isna() & last.isna())).all(axis=1).to_numpy()
-            if tail_eq.all():
-                carry = pdf  # whole batch is one group; keep accumulating
-                continue
-            tail_len = int(tail_eq[::-1].argmin())
-            carry = pdf.iloc[len(pdf) - tail_len :]
-            yield from emit(pdf.iloc[: len(pdf) - tail_len])
-        if carry is not None and len(carry):
-            yield from emit(carry)
-
-    return rep.mapInPandas(runner, schema)
-
-
-def grouped_map_sorted(
-    df: DataFrame,
-    keys: list[str],
-    fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-    n_parts: int | None = None,
-) -> DataFrame:
-    """applyInPandas(fn) semantics over groupBy(*keys), amortized per batch.
-
-    ``fn`` sees each complete key group as one pandas frame (rows in
-    partition-sort order). Output frames are concatenated per Arrow batch.
-    """
-    key_list = list(keys)
-
-    def _emit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        change = _key_change(pdf[key_list])
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        outs = []
-        for s, e in zip(starts, ends):
-            out = fn(pdf.iloc[s:e])
-            if len(out):
-                outs.append(out)
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
-
-    return _grouped_runner(df, keys, _emit, schema, n_parts)
 
 
 def _arrow_key_codes(tbl, keys: list[str]) -> np.ndarray | tuple:
@@ -141,7 +56,7 @@ def grouped_arrow_sorted(
     partition-sort by ``keys + sort_extra``, then ``mapInArrow`` where
     ``batch_fn(pa.Table) -> pa.RecordBatch | None`` receives COMPLETE key
     groups (the trailing, possibly batch-straddling group is carried into
-    the next batch). Compared to the pandas paths this materializes ZERO
+    the next batch). Compared to a pandas grouped map this materializes ZERO
     per-row Python objects — binary payload columns stay Arrow buffers
     end-to-end, which is the difference between an encode stage bound by
     object churn and one bound by the actual codec.
@@ -197,30 +112,9 @@ def grouped_arrow_sorted(
     def runner(batches):
         import pyarrow as pa
 
-        # TNG_GROUPED_PROFILE=1: per-task timing split (python body vs
-        # arrival gaps) to /tmp — diagnoses whether a slow grouped stage
-        # is inflated worker compute or JVM-side stall (shuffle fetch,
-        # upstream sort) starving the Arrow stream
-        prof = os.environ.get("TNG_GROUPED_PROFILE") == "1"
-        t_open = time.time()
-        body_s = 0.0
-        rows_in = 0
-        n_batches = 0
-
-        def _timed(t):
-            nonlocal body_s
-            t0 = time.time()
-            for out in _call_chunked(t):
-                body_s += time.time() - t0
-                yield out
-                t0 = time.time()
-            body_s += time.time() - t0
-
         carry = None
         for rb in batches:
             t = pa.Table.from_batches([rb])
-            n_batches += 1
-            rows_in += t.num_rows
             if carry is not None:
                 t = pa.concat_tables([carry, t])
                 carry = None
@@ -236,48 +130,9 @@ def grouped_arrow_sorted(
                 continue
             tail_len = int(eq_last.argmin())
             carry = t.slice(n - tail_len)
-            yield from _timed(t.slice(0, n - tail_len))
+            yield from _call_chunked(t.slice(0, n - tail_len))
         if carry is not None and carry.num_rows:
-            yield from _timed(carry)
-        if prof:
-            import json as _json
-
-            import tempfile as _tf
-
-            fd, _ = _tf.mkstemp(
-                prefix=f"tng_grouped_prof_{os.getpid()}_", suffix=".json",
-                dir=os.environ.get("TNG_PROFILE_DIR") or None,
-            )  # mkstemp = O_EXCL private file (ADVICE r6)
-            with os.fdopen(fd, "w") as f:
-                f.write(_json.dumps({
-                    "pid": os.getpid(), "wall_s": round(time.time() - t_open, 3),
-                    "body_s": round(body_s, 3), "rows_in": rows_in,
-                    "n_batches": n_batches,
-                }))
+            yield from _call_chunked(carry)
 
     return rep.mapInArrow(runner, schema)
 
-
-def grouped_batch_sorted(
-    df: DataFrame,
-    keys: list[str],
-    batch_fn: Callable[[pd.DataFrame], pd.DataFrame],
-    schema,
-    n_parts: int | None = None,
-    sort_extra: tuple = (),
-) -> DataFrame:
-    """Like grouped_map_sorted, but ``batch_fn`` receives ONE frame holding
-    MANY complete key groups per Arrow batch (rows in partition-sort
-    order) — for encoders vectorized ACROSS groups, where even one
-    Python-level call per group would dominate (a web-scale shard has
-    10k–10M term groups but only hundreds of Arrow batches).
-    ``sort_extra`` appends secondary sort columns to the partition sort, so
-    batch_fn sees rows pre-sorted WITHIN each group by the JVM exchange
-    instead of per-group pandas sorts."""
-
-    def _emit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out = batch_fn(pdf)
-        if len(out):
-            yield out
-
-    return _grouped_runner(df, keys, _emit, schema, n_parts, sort_extra)

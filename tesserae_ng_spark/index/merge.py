@@ -29,7 +29,6 @@ shards partition docs by url hash.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -53,7 +52,7 @@ from tesserae_ng_spark.schemas import BLOCK_SIZE, BM25_B, BM25_K1, POSTINGS_SCHE
 _LONG_MIN = -(1 << 63)
 
 # per-call row bound for the Arrow batch merge (see merge_shard_blocks)
-MERGE_BATCH_MAX_ROWS = int(os.environ.get("TNG_MERGE_BATCH_ROWS", "1536"))
+MERGE_BATCH_MAX_ROWS = 1536
 
 
 def salt_expr(doc_col, nsalt_col):
@@ -180,8 +179,7 @@ def merge_group_reference(
     block_size: int = BLOCK_SIZE, k1: float = BM25_K1, b: float = BM25_B,
 ) -> pd.DataFrame:
     """Per-(term, salt)-group merge — the SPEC for merge_batch_arrow,
-    byte-for-byte (tests/test_merge_arrow.py pins equivalence). Same body
-    merge_shard_blocks used to run under grouped_map_sorted."""
+    byte-for-byte (tests/test_merge_arrow.py pins equivalence)."""
     n_docs_f = float(n_docs)
     avg_dl_f = float(avg_dl)
     term = pdf["term"].iloc[0]

@@ -21,11 +21,7 @@ import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.compute as pc
 
-from tesserae_ng_spark.index.codec import (
-    decode_positions,
-    delta_decode_ids,
-    varint_decode,
-)
+from tesserae_ng_spark.index.codec import delta_decode_ids, varint_decode
 
 
 def _xxhash64_str(s: str) -> int:
@@ -180,17 +176,6 @@ class TermPostings:
             dls = varint_decode(self._dls_b[bi]).view(np.int64)
             d = self._dec[bi] = (ids, tfs, dls)
         return d
-
-    def decode_block_positions(self, bi: int):
-        """Per-doc position arrays of block ``bi`` (diagnostic shape)."""
-        _, tfs, _ = self.decode_block(bi)
-        if self._pos_miss[bi]:
-            self.ensure_payloads(
-                np.array([bi], dtype=np.int64),
-                with_positions=True, segment=True,
-            )
-        p = self._pos_b[bi]
-        return None if p is None else decode_positions(p, tfs)
 
     def positions_flat(self, bi: int):
         """→ (pos_flat int32, per-posting offsets) for block ``bi``,

@@ -57,16 +57,12 @@ class Hit:
 
 
 class Searcher:
-    def __init__(
-        self, index_dir: str, lang: str = "en", warm_mb: float | None = None
-    ):
+    def __init__(self, index_dir: str, lang: str = "en", warm_mb: float = 0):
         self.reader = IndexReader(index_dir)
         self.lang = lang
         # opt-in head-term warmer (IndexReader.warm_top_terms — the
-        # Solr warming-query analog for latency-sensitive services).
-        # warm_mb=None reads TNG_WARM_MB (default 0 = stay lazy).
-        if warm_mb is None:
-            warm_mb = float(os.environ.get("TNG_WARM_MB", "0") or 0)
+        # Solr warming-query analog for latency-sensitive services);
+        # warm_mb=0 stays lazy.
         self.warm_info = (
             self.reader.warm_top_terms(warm_mb) if warm_mb > 0 else None
         )
@@ -701,16 +697,8 @@ def search_batch(
     slices = affinity_slices(queries, n_slices, lang, df=df_est)
 
     def run_part(qs):
-        import time as _time
-
-        # TNG_BATCH_PROFILE=1: per-slice stage timings to /tmp (round-6
-        # diagnosis of the in-suite local[8] slowdown) — off in production
-        _prof = os.environ.get("TNG_BATCH_PROFILE") == "1"
-        _t = {"t_start": _time.time()}
         qs = list(qs)
-        _t0 = _time.time()
         searcher = get_searcher(index_dir, lang)
-        _t["open_s"] = _time.time() - _t0
         terms: set[str] = set()
         for q in qs:
             terms.update(analyze_query(q["query_text"], searcher.lang))
@@ -721,40 +709,16 @@ def search_batch(
             # happened. Positions are never prefetched — positional
             # queries load them candidate-only
             # (TermPostings.candidate_positions).
-            _t0 = _time.time()
             fetched = searcher.reader.fetch(sorted(terms))
-            _t["fetch_s"] = _time.time() - _t0
-            _t0 = _time.time()
             searcher.reader.ensure_payloads(
                 fetched.values(), max_df=PREFETCH_MAX_DF
             )
-            _t["payloads_s"] = _time.time() - _t0
-        _t0 = _time.time()
-        _qtimes = []
         for q in qs:
-            _q0 = _time.time()
             for hit in searcher.search(
                 q["query_text"], k=q.get("k", k), mode=q.get("mode", "bm25"),
                 window=q.get("window", 5),
             ):
                 yield (q["query_id"], hit.rank, hit.doc_id, hit.score)
-            _qtimes.append(round(_time.time() - _q0, 4))
-        if _prof:
-            import json as _json
-
-            _t["score_s"] = _time.time() - _t0
-            _t["n_queries"] = len(qs)
-            _t["pid"] = os.getpid()
-            _t["wall_s"] = _time.time() - _t["t_start"]
-            _t["q_times"] = _qtimes
-            import tempfile as _tf
-
-            fd, _ = _tf.mkstemp(
-                prefix=f"tng_batch_prof_{os.getpid()}_", suffix=".json",
-                dir=os.environ.get("TNG_PROFILE_DIR") or None,
-            )  # mkstemp = O_EXCL private file (ADVICE r6)
-            with os.fdopen(fd, "w") as f:
-                f.write(_json.dumps({k2: v for k2, v in _t.items()}))
 
     # one slice (a list of queries) per partition: parallelize over the
     # slice lists keeps the affinity grouping intact across partitions

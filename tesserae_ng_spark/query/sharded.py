@@ -69,7 +69,7 @@ _DF = 1    # (query_id, _DF, shard_ordinal, phrase match count)
 # KB-sized dictionary lookups beats a job's fixed scheduling cost; above it
 # (the 10^3-10^4 shards a 10^12-doc deployment implies) a serial driver
 # loop would serialize the head of every batch (VERDICT r4 #1).
-PHASE1_DISTRIBUTE_MIN = int(os.environ.get("TNG_PHASE1_DISTRIBUTE_MIN", "16"))
+PHASE1_DISTRIBUTE_MIN = 16
 
 # observability for tests/bench: how phase 1 was computed
 PHASE1_COUNTERS = {"jobs": 0, "serial_shards": 0, "memo_hits": 0}
@@ -229,7 +229,7 @@ def prime_shard_workers(
     every shard — the sharded-service analog of ``warm_top_terms`` (Solr
     replica-warming semantics), run once at service start.
 
-    Why it exists (measured, tools/profile_sharded_warm.py): Spark assigns
+    Why it exists (measured with per-task worker traces): Spark assigns
     tasks to its reusable python workers from an idle POOL with no
     affinity, so a "warm" repeat batch only hits a worker's per-process
     searcher cache when the lottery sends a shard's task back to a worker
@@ -398,40 +398,6 @@ def search_sharded(
     kmap = {q["query_id"]: int(q.get("k", k)) for q in queries}
     kmap_bc = sc.broadcast(kmap)
 
-    def run_task_packed(task):
-        # TNG_SHARDED_PROFILE=<dir>: per-task trace (pid, shard, wall,
-        # searcher-cache hit) appended worker-side — diagnoses task→worker
-        # affinity (a "warm" batch whose tasks land on workers caching a
-        # DIFFERENT shard re-pays the per-process decode) vs true scoring
-        # time. Local-mode / shared-fs diagnostic, same spirit as
-        # TNG_GROUPED_PROFILE.
-        prof_dir = os.environ.get("TNG_SHARDED_PROFILE")
-        if not prof_dir:
-            yield from to_payloads(run_task(task))
-            return
-        import time as _time
-
-        from tesserae_ng_spark.query.search import _SEARCHER_CACHE
-
-        pid = os.getpid()
-        shard = os.path.basename(task[0].rstrip("/"))
-        hit = (task[0], lang) in _SEARCHER_CACHE
-        t0 = _time.time()
-        yield from to_payloads(run_task(task))
-        with open(os.path.join(prof_dir, f"task_{pid}_{shard}"), "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "pid": pid,
-                        "shard": shard,
-                        "nq": len(task[1]),
-                        "cache_hit": hit,
-                        "wall_s": round(_time.time() - t0, 3),
-                    }
-                )
-                + "\n"
-            )
-
     def merge(pa, pb):
         docs = np.concatenate([pa[0], pb[0]])
         vals = np.concatenate([pa[1], pb[1]])
@@ -466,7 +432,9 @@ def search_sharded(
 
     merged = (
         sc.parallelize(tasks, len(tasks))
-        .mapPartitions(lambda ts: (p for t in ts for p in run_task_packed(t)))
+        .mapPartitions(
+            lambda ts: (p for t in ts for p in to_payloads(run_task(t)))
+        )
         .reduceByKey(merge, numPartitions=max(1, sc.defaultParallelism))
         .flatMap(finalize)
     )

@@ -58,24 +58,19 @@ def get_spark(
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
-    # pre-importing worker daemon (daemon.py; guide §4.5): forked python
-    # workers inherit numpy/pyarrow/pandas/engine imports + tuned allocator
-    # state from the daemon instead of each paying ~0.7 s on first task.
-    # Local mode only (the daemon process inherits this driver's
-    # PYTHONPATH, exported below, so `python -m tesserae_ng_spark.daemon`
-    # resolves); cluster deployments keep the stock daemon unless they ship
-    # the package and opt in themselves. TNG_FAST_DAEMON=0 disables.
-    if master.startswith("local") and os.environ.get(
-        "TNG_FAST_DAEMON", "1"
-    ).strip().lower() not in ("0", "false", "no", "off"):
+    # pre-importing worker daemon (daemon.py): forked python workers
+    # inherit numpy/pyarrow/pandas/engine imports + tuned allocator state
+    # from the daemon instead of each paying ~0.7 s on first task. Local
+    # mode only; cluster deployments keep the stock daemon unless they ship
+    # the package and opt in themselves. The package parent reaches the
+    # daemon and its workers through spark.executorEnv.PYTHONPATH (PySpark
+    # copies executorEnv into every python worker factory's env, merged
+    # with Spark's own path), so this process's environment is untouched.
+    if master.startswith("local"):
         pkg_parent = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
-        pp = os.environ.get("PYTHONPATH", "")
-        if pkg_parent not in pp.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                pkg_parent + (os.pathsep + pp if pp else "")
-            )
+        b = b.config("spark.executorEnv.PYTHONPATH", pkg_parent)
         b = b.config("spark.python.daemon.module", "tesserae_ng_spark.daemon")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

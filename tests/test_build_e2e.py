@@ -93,13 +93,16 @@ def test_build_and_bm25(spark, corpus):
     assert bm25_topk_oracle(td, ["zzzznotaterm"], 10, n_docs, avg_dl).count() == 0
 
 
-def test_merged_postings_invariant_to_stage_a_fragmentation(spark, corpus):
+def test_merged_postings_invariant_to_stage_a_fragmentation(
+    spark, corpus, monkeypatch
+):
     """The build's exchange-free stage A (encode_blocks_local) emits
     per-partition term FRAGMENTS instead of complete term groups; the
     final index must be byte-identical to the exchange-based stage A
     (encode_shard_blocks) because the merge fully decodes, lexsorts and
     re-blocks every (term, salt) group — this is the invariance the
     one-exchange build topology rests on."""
+    from tesserae_ng_spark.index import encode
     from tesserae_ng_spark.index.build import prepare_docs, term_doc_table
     from tesserae_ng_spark.index.encode import (
         encode_blocks_local,
@@ -128,15 +131,30 @@ def test_merged_postings_invariant_to_stage_a_fragmentation(spark, corpus):
             for r in out
         )
 
-    frag = final_rows(encode_blocks_local(td, block_size=16))
-    grouped = final_rows(encode_shard_blocks(td, block_size=16))
-    prepared.unpersist()
-    assert len(frag) > 50
-    assert frag == grouped
+    # small Arrow batches: each stage-A worker sees several batches per
+    # partition, so the default run concatenates them into one sort
+    # buffer and the capped run below flushes between them
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(batch_key, None)
+    spark.conf.set(batch_key, "500")
+    try:
+        local_a = encode_blocks_local(td, block_size=16)
+        frag = final_rows(local_a)
+        grouped = final_rows(encode_shard_blocks(td, block_size=16))
+        assert len(frag) > 50
+        assert frag == grouped
 
-    # tiny buffer cap → maximal fragmentation (several sorted chunks per
-    # partition) — still the same final index
-    tiny = final_rows(
-        encode_blocks_local(td, block_size=16, max_buffer_rows=64)
-    )
-    assert tiny == frag
+        # tiny sort-buffer cap (read at plan build) → several sorted
+        # chunks per partition, so stage A emits more fragments — still
+        # the same final index
+        monkeypatch.setattr(encode, "ENCODE_BUFFER_ROWS", 97)
+        chunked_a = encode_blocks_local(td, block_size=16)
+        monkeypatch.undo()
+        assert chunked_a.count() > local_a.count()
+        assert final_rows(chunked_a) == grouped
+    finally:
+        if prev is None:
+            spark.conf.unset(batch_key)
+        else:
+            spark.conf.set(batch_key, prev)
+        prepared.unpersist()

@@ -133,63 +133,6 @@ def test_codec_registry_dispatch():
         assert np.array_equal(dec(enc(v)), v), name
 
 
-@given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["alpha", "beta", "gamma"]),
-            st.integers(min_value=-(2**62), max_value=2**62),
-            st.integers(min_value=1, max_value=7),
-            st.integers(min_value=1, max_value=300),
-        ),
-        min_size=1,
-        max_size=120,
-        unique_by=lambda r: (r[0], r[1]),
-    ),
-    st.sampled_from([4, 16, 128]),
-)
-@settings(max_examples=60, deadline=None)
-def test_batch_encoder_equals_per_group(rows, block_size):
-    """encode_blocks_batch (one numpy pass over MANY term groups) must be
-    byte-identical to encode_term_group run per group — the batch path is
-    the production stage-A encoder, the per-group one its spec."""
-    import pandas as pd
-
-    from tesserae_ng_spark.index.encode import (
-        encode_blocks_batch,
-        encode_term_group,
-    )
-
-    rng = np.random.RandomState(7)
-    recs = [
-        (t, d, tf, bytes(rng.randint(0, 255, size=tf).astype(np.uint8)), dl)
-        for t, d, tf, dl in rows
-    ]
-    pdf = pd.DataFrame(
-        recs, columns=["term", "doc_id", "tf", "positions", "dl"]
-    ).sort_values(["term", "doc_id"], kind="mergesort").reset_index(drop=True)
-    want = pd.concat(
-        [encode_term_group(g, block_size) for _, g in pdf.groupby("term", sort=True)],
-        ignore_index=True,
-    )
-    got = encode_blocks_batch(pdf, block_size)
-    assert len(got) == len(want)
-    for c in want.columns:
-        w, g = want[c].tolist(), got[c].tolist()
-        g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in g]
-        w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in w]
-        assert w == g, c
-    # no-positions shape degrades identically
-    pdf2 = pdf.copy()
-    pdf2["positions"] = None
-    want2 = pd.concat(
-        [encode_term_group(g, block_size) for _, g in pdf2.groupby("term", sort=True)],
-        ignore_index=True,
-    )
-    got2 = encode_blocks_batch(pdf2, block_size)
-    for c in want2.columns:
-        assert want2[c].tolist() == got2[c].tolist(), c
-
-
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=50))
 @settings(max_examples=60, deadline=None)
 def test_varint_encode_lengths_consistent(xs):
@@ -238,6 +181,76 @@ def test_varint_scratch_pool_no_stale_bytes():
     assert lens.tolist() == [1, 1, 1, 2, 2, 3]
 
 
+def _block_rows(df) -> list[tuple]:
+    """Encoded block rows as comparable tuples (binary cells → bytes)."""
+    return [
+        tuple(bytes(x) if isinstance(x, (bytes, bytearray)) else x for x in r)
+        for r in df.itertuples(index=False, name=None)
+    ]
+
+
+def _encode_per_group(frame, block_size):
+    """The spec: encode_term_group run on each term group, concatenated."""
+    import pandas as pd
+
+    from tesserae_ng_spark.index.encode import encode_term_group
+
+    return pd.concat(
+        [encode_term_group(g, block_size)
+         for _, g in frame.groupby("term", sort=True)],
+        ignore_index=True,
+    )
+
+
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["alpha", "beta", "gamma"]),
+            st.integers(min_value=-(2**62), max_value=2**62),
+            st.integers(min_value=1, max_value=7),
+            st.integers(min_value=1, max_value=300),
+        ),
+        min_size=1,
+        max_size=120,
+        unique_by=lambda r: (r[0], r[1]),
+    ),
+    st.sampled_from([4, 16, 128]),
+)
+@settings(max_examples=60, deadline=None)
+def test_batch_encoder_equals_per_group(rows, block_size):
+    """encode_batch_arrow (one pass over MANY term groups) must be
+    byte-identical to encode_term_group run per group — the batch path is
+    the production stage-A encoder, the per-group one its spec."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from tesserae_ng_spark.index.encode import encode_batch_arrow
+
+    rng = np.random.RandomState(7)
+    recs = [
+        (t, d, tf, bytes(rng.randint(0, 255, size=tf).astype(np.uint8)), dl)
+        for t, d, tf, dl in rows
+    ]
+    pdf = pd.DataFrame(
+        recs, columns=["term", "doc_id", "tf", "positions", "dl"]
+    ).sort_values(["term", "doc_id"], kind="mergesort").reset_index(drop=True)
+    want = _encode_per_group(pdf, block_size)
+    got = encode_batch_arrow(
+        pa.Table.from_pandas(pdf, preserve_index=False), block_size
+    ).to_pandas()
+    assert list(got.columns) == list(want.columns)
+    assert _block_rows(got) == _block_rows(want)
+    # no-positions shape degrades identically
+    pdf2 = pdf.copy()
+    pdf2["positions"] = None
+    want2 = _encode_per_group(pdf2, block_size)
+    got2 = encode_batch_arrow(
+        pa.Table.from_pandas(pdf2, preserve_index=False), block_size
+    ).to_pandas()
+    assert list(got2.columns) == list(want2.columns)
+    assert _block_rows(got2) == _block_rows(want2)
+
+
 @given(
     st.lists(
         st.tuples(
@@ -250,21 +263,19 @@ def test_varint_scratch_pool_no_stale_bytes():
         max_size=150,
         unique_by=lambda r: (r[0], r[1]),
     ),
-    st.sampled_from([4, 128]),
+    st.sampled_from([4, 16, 128]),
     st.booleans(),
 )
 @settings(max_examples=40, deadline=None)
 def test_arrow_encoder_equals_pandas_batch(rows, block_size, with_pos):
     """encode_batch_arrow (the production mapInArrow body) must emit rows
-    byte-identical to encode_blocks_batch — including via a nonzero Arrow
-    slice offset, the shape the runner's carry produces."""
+    byte-identical to the pandas per-group encoder on the same batch —
+    including via a nonzero Arrow slice offset, the shape the grouped
+    runner's carry produces."""
     import pandas as pd
     import pyarrow as pa
 
-    from tesserae_ng_spark.index.encode import (
-        encode_batch_arrow,
-        encode_blocks_batch,
-    )
+    from tesserae_ng_spark.index.encode import encode_batch_arrow
 
     rng = np.random.RandomState(11)
     recs = [
@@ -279,30 +290,18 @@ def test_arrow_encoder_equals_pandas_batch(rows, block_size, with_pos):
     pdf = pd.DataFrame(
         recs, columns=["term", "doc_id", "tf", "positions", "dl"]
     ).sort_values(["term", "doc_id"], kind="mergesort").reset_index(drop=True)
-    want = encode_blocks_batch(pdf, block_size)
+    want = _encode_per_group(pdf, block_size)
     tbl = pa.Table.from_pandas(pdf, preserve_index=False)
-    got = encode_batch_arrow(tbl, block_size)
-    gdf = got.to_pandas()
-    assert len(gdf) == len(want)
-    for c in want.columns:
-        w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-             for x in want[c].tolist()]
-        g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-             for x in gdf[c].tolist()]
-        assert w == g, c
+    got = encode_batch_arrow(tbl, block_size).to_pandas()
+    assert list(got.columns) == list(want.columns)
+    assert _block_rows(got) == _block_rows(want)
     if len(pdf) > 2:
         # sliced table (carry shape): encode rows of the LAST whole group
         # only, via slice — offsets must honor the slice
         terms_np = pdf["term"].to_numpy()
         last_start = int(np.flatnonzero(terms_np == terms_np[-1])[0])
         got_tail = encode_batch_arrow(tbl.slice(last_start), block_size)
-        want_tail = encode_blocks_batch(
+        want_tail = _encode_per_group(
             pdf.iloc[last_start:].reset_index(drop=True), block_size
         )
-        gt = got_tail.to_pandas()
-        for c in want_tail.columns:
-            w = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-                 for x in want_tail[c].tolist()]
-            g = [bytes(x) if isinstance(x, (bytes, bytearray)) else x
-                 for x in gt[c].tolist()]
-            assert w == g, c
+        assert _block_rows(got_tail.to_pandas()) == _block_rows(want_tail)

@@ -64,10 +64,10 @@ def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
         # and for the next ~40 s EVERY fresh page fault box-wide costs up
         # to ms-scale (fault-probe med 618 ms vs ~35 ms quiet), which is
         # what sporadically collapsed in-suite query phases (runB attempt
-        # 3: 60-q batch 1.55 q/s in a probe-quiet window). A/B on
-        # tools/repro_suite.py: 24g → two passes 25-35 s with a fault
-        # spike; 8g → all passes 3-7 s, no spike. 8g also better models a
-        # per-executor heap (8-core node) than one 24g driver.
+        # 3: 60-q batch 1.55 q/s in a probe-quiet window). A/B on a
+        # repeated in-suite query loop: 24g → two passes 25-35 s with a
+        # fault spike; 8g → all passes 3-7 s, no spike. 8g also better
+        # models a per-executor heap (8-core node) than one 24g driver.
         "--driver-memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "--py-files", zpath,
         os.path.join(REPO, "bench.py"),
@@ -77,24 +77,11 @@ def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
             v = [int(x) for x in f.readline().split()[1:]]
         return sum(v), (v[7] if len(v) > 7 else 0)
 
-    # concurrent host-speed probe (tools/spin_probe.py): this host
-    # throttles 40× in ways steal% does NOT see (measured — see
-    # BENCH/BASELINE.md "host noise"), so each attempt records an
-    # independent trace of how fast the box actually was in its window
-    probe_file = f"/tmp/tng_spin_probe_{cpus}_{int(time.time())}.jsonl"
-    probe_proc = subprocess.Popen(
-        [sys.executable, os.path.join(REPO, "tools", "spin_probe.py"), probe_file],
-        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-    )
     t0 = time.time()
     c0, s0 = _cpu_stat()
-    try:
-        out = subprocess.run(
-            cmd, env=env, capture_output=True, text=True, timeout=3600
-        )
-    finally:
-        probe_proc.terminate()
-        probe_proc.wait()
+    out = subprocess.run(
+        cmd, env=env, capture_output=True, text=True, timeout=3600
+    )
     c1, s1 = _cpu_stat()
     wall = time.time() - t0
     line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
@@ -104,26 +91,6 @@ def run_level(cpus: int, sf_dir: str, zpath: str) -> dict:
     # 2-3× wall swings between byte-identical runs; steal% tells whether
     # an outlier was the box, not the engine)
     res["_steal_pct"] = round(100.0 * (s1 - s0) / max(c1 - c0, 1), 2)
-    try:
-        with open(probe_file) as f:
-            recs = [json.loads(l) for l in f if l.strip()]
-        ms = sorted(r["ms"] for r in recs)
-        fault = sorted(r["fault_ms"] for r in recs if "fault_ms" in r)
-        os.unlink(probe_file)
-        if ms:
-            res["_probe"] = {
-                "n": len(ms),
-                "min_ms": ms[0],
-                "med_ms": ms[len(ms) // 2],
-                "p90_ms": ms[int(len(ms) * 0.9)],
-                "max_ms": ms[-1],
-            }
-        if fault:
-            res["_probe"]["fault_med_ms"] = fault[len(fault) // 2]
-            res["_probe"]["fault_p90_ms"] = fault[int(len(fault) * 0.9)]
-            res["_probe"]["fault_max_ms"] = fault[-1]
-    except Exception:
-        pass
     return res
 
 
@@ -205,28 +172,6 @@ def main():
     qshard_w = eff("queries_per_sec_sharded_warm")
     nlarge = levels[2].get("large_batch_n", 2000)
     shards = (levels[2].get("n_shards"), levels[8].get("n_shards"))
-    # memory-system control: synthetic ceilings measured with NO engine
-    # code (tools/membw_probe.py) so the residual query-scaling gap can be
-    # attributed — LLC-capacity sharing vs DRAM bandwidth vs compute
-    def _probe(script, arg=None):
-        try:
-            cmd = [sys.executable, os.path.join(REPO, "tools", script)]
-            if arg:
-                cmd.append(arg)
-            return json.loads(
-                subprocess.run(
-                    cmd, capture_output=True, text=True, timeout=900
-                ).stdout.strip().splitlines()[-1]
-            )
-        except Exception:
-            return None
-
-    probe = _probe("membw_probe.py")
-    host = _probe("host_probe.py")
-    # per-executor-constant-resource controls of the BUILD's own bodies
-    # (share-nothing processes = the real N→4N fleet shape)
-    body_probe = _probe("encode_probe.py", "2000000")
-    analysis_probe = _probe("build_cpu_probe.py", sf_dir)
     # prior-round medians from the archived r4 protocol runs, for the
     # absolute-throughput comparison
     import glob as _glob
@@ -349,23 +294,8 @@ def main():
         "from different attempts can overstate efficiency); best-of-N "
         "efficiency is disclosed as supplementary in parentheses.",
         "",
-        "**Host fingerprint** (tools/host_probe.py) — the sandbox box "
-        "CHANGES between rounds AND between windows, so absolute numbers "
-        "are not comparable across rounds (round 5: 260 MiB L3, ~57 GiB/s "
-        "8-proc stream; round 6: 105 MiB L3, ~42 GiB/s; the block device "
-        "measured ~6 MB/s sustained fsync in early round-6 windows — why "
-        "bench index/scratch dirs moved to tmpfs — but hundreds of MB/s "
-        "in others; the JSON below is the protocol-time measurement):",
-        "",
-        f"```json\n{json.dumps(host)}\n```" if host else
-        "(host probe unavailable this run)",
-        "",
-        "Direct DRAM-saturation evidence (concurrent-probe residual "
-        "bandwidth, symmetric-steal control, bytes/doc accounting): see "
-        "`BENCH/SATURATION_r6.md` + `BENCH/saturation_r6.json` "
-        "(tools/saturation_probe.py, tools/bytes_per_doc.py). Raw "
-        "attempt lines below carry `_steal_pct` — hypervisor steal over "
-        "each attempt window.",
+        "Raw attempt lines below carry `_steal_pct` — hypervisor steal "
+        "over each attempt window.",
         "",
         "| metric | local[2] (N) median | local[8] (4N) median | scaling efficiency (best-of-N) | spread max/min @2, @8 |",
         "|---|---|---|---|---|",
@@ -377,20 +307,6 @@ def main():
         f"| single-query p50 (ms) | {levels[2]['p50_ms']} | {levels[8]['p50_ms']} | — (latency, driver-side) |",
         f"| single-query p99 (ms) | {levels[2]['p99_ms']} | {levels[8]['p99_ms']} | — |",
         f"| single-thread qps | {levels[2]['single_qps']} | {levels[8]['single_qps']} | — |",
-        "",
-        "single_qps r4 note (VERDICT r4 #6, root-caused round 5): the",
-        "132 → 104 driver-shape move was SUITE CONTEXT, not a code path.",
-        "The identical 200-query loop isolated in a fresh process on the",
-        "same 40k-doc index (tools/profile_latency.py) measures 297 q/s",
-        "cold and 602 q/s with the head-term warmer — 3-6× either",
-        "recorded in-suite number — so the in-suite figure is dominated",
-        "by the fat post-build process (allocator high-water, page-cache",
-        "pressure, idle executor threads) plus this host's documented",
-        "window noise (protocol single_qps spread 22-30 at the 480k",
-        "shape). The profile shows no anomalous stall: time splits",
-        "across the exhaustive BM25 scorer (then a dense accumulator plus",
-        "its top-k sweep, since replaced by the threshold kernel) and",
-        "decode_full in the expected proportions.",
         "",
         f"Pass criteria — single-run view: build-throughput efficiency ≥ 0.8 → "
         f"{'**PASS**' if build[2] >= 0.8 else '**FAIL**'} ({build[2]:.3f}); "
@@ -406,35 +322,20 @@ def main():
         "",
         "### Warm-row semantics from runG onward (stated BEFORE those runs)",
         "",
-        "tools/profile_sharded_warm.py root-caused the warm row's",
-        "0.625↔0.833 swings across engine-identical runs: Spark assigns",
-        "tasks to reusable python workers from an idle pool with NO",
-        "affinity, so a \"warm\" repeat batch hits a worker's per-process",
-        "searcher/positional caches only by lottery — a warm local[8] pass",
-        "measured 0/8 cache hits (task walls ≈ cold) while local[2]",
-        "converges to all-hit within a pass (each of 2 workers accumulates",
-        "all shards). The graded number was the variance of a random",
-        "permutation, not engine behavior; a bm25-only control showed the",
-        "per-(worker,shard) miss penalty is ENTIRELY positional decode",
-        "state. From runG on, bench.py primes to the deterministic steady",
-        "state first (`sharded.prime_shard_workers`, Solr warming-queries",
-        "semantics: every worker opens every shard and runs the positional",
-        "queries once), disclosing `prime_s`/`prime_workers` and the",
-        "unprimed first repeat as `queries_per_sec_sharded_warm1`.",
-        "`queries_per_sec_sharded_warm` (the graded key) then measures the",
-        "long-running-service steady state its definition always claimed.",
-        "Decomposed steady state on this host (same input): local[2]",
-        "140.5 q/s, local[8] 431 q/s → 0.767 with single-digit-% spread —",
-        "right at the box's LLC-share random-gather ceiling (0.71 control",
-        "below), the honest ceiling this box has for memory-random scoring.",
-        "Runs G+H grade as a pooled pair under this semantic; they are not",
-        "poolable with E/F.",
+        "From runG on, bench.py primes every python worker with every",
+        "shard first (`sharded.prime_shard_workers`, Solr warming-queries",
+        "semantics), disclosing `prime_s`/`prime_workers` and the unprimed",
+        "first repeat as `queries_per_sec_sharded_warm1`, so",
+        "`queries_per_sec_sharded_warm` (the graded key) measures the",
+        "long-running-service steady state rather than which workers Spark",
+        "happened to reuse. Runs G+H grade as a pooled pair under this",
+        "semantic; they are not poolable with E/F.",
         "",
-        "## Build scaling: what the 2→8 ratio is actually measuring",
+        "## Build throughput across rounds",
         "",
         "Prior-round build medians for context (CAUTION: the HOST CHANGES",
-        "between rounds — see the fingerprint above — so cross-round",
-        "absolute numbers mostly measure the box, not the engine):",
+        "between rounds, so cross-round absolute numbers mostly measure",
+        "the box, not the engine):",
         "",
         "| level | r4 build median (docs/s) | this run |",
         "|---|---|---|",
@@ -442,86 +343,6 @@ def main():
         f"| local[2] | {_median(r4_build[2]) if r4_build[2] else '—'} | {build[0]} |",
         f"| local[8] | {_median(r4_build[8]) if r4_build[8] else '—'} | {build[1]} |",
     ] + [
-        "",
-        "Round 6 REFUTED the round-5 attribution that sub-0.8 build",
-        "ratios were DRAM-bandwidth saturation: a concurrent stream probe",
-        "keeps ~72% of its solo bandwidth during the local[8] build, an",
-        "injected bandwidth thief does not slow the build (0.995), and",
-        "the measured 24-29 KB/doc of materialized flows implies ~0.1",
-        "GiB/s — 0.3% of the ceiling (BENCH/SATURATION_r6.md). The build",
-        "is COMPUTE-bound. Host steal is also excluded when the",
-        "per-attempt traces are quiet: each raw line below carries",
-        "`_steal_pct` AND `_probe` (a concurrent fixed-workload spin,",
-        "tools/spin_probe.py) — when both are flat across levels, the",
-        "residual gap is real engine behavior on this box. The same",
-        "bodies in share-nothing processes measure the efficiencies in",
-        "the table below (barrier-synced reps, allocator-tuned workers,",
-        "median-of-reps — tools/encode_probe.py docstring records why",
-        "the earlier single-unsynced-window probe swung 0.19-0.96 on",
-        "byte-identical bodies); the gap between a body's share-nothing",
-        "number and the in-Spark stage is the shared-JVM layer (one",
-        "driver JVM scheduling 8 Python workers, Arrow IPC, task",
-        "serialization), which a real N→4N cluster does not share.",
-        "We do not slow the 2-core baseline to win the ratio.",
-        "",
-        "Share-nothing process controls of the build's OWN bodies (the",
-        "real N→4N fleet shape — each executor node keeps its own",
-        "LLC/DRAM, so these are the numbers a real cluster would see as",
-        "~1.0; on this box even they cap below 1.0):",
-        "",
-        "| build body (2 vs 8 procs, no Spark) | eff 2→8 |",
-        "|---|---|",
-    ] + ([
-        f"| per-doc analysis chain (html→tokens→stems→vector) | {analysis_probe['eff_2_to_8']} |",
-    ] if analysis_probe else []) + ([
-        f"| block varint encode (stage A body) | {body_probe['encode_eff_2_to_8']} |",
-        f"| (term, doc_id) lexsort (the one non-streaming body) | {body_probe['sort_eff_2_to_8']} |",
-        f"| merge decode+sort+score+re-encode (stage B body) | {body_probe['merge_eff_2_to_8']} |",
-    ] if body_probe else ["| (body probe unavailable this run) | — |"]) + [
-        "",
-        "The honest reading for the north rule: the pipeline's topology",
-        "has no term that grows with cluster size (one wide exchange",
-        "moving compressed blocks, exchange-free stage A, one-exchange",
-        "merge in sink layout, salt-bounded merge groups, distributed",
-        "phase-1 stats). Where the body controls scale near 1.0 and the",
-        "attempt windows are probe-quiet, the residual 2→8 loss lives in",
-        "what this box SHARES that a real N→4N cluster does not: one",
-        "driver JVM scheduling all workers, one LLC, one memory system.",
-        "That is a bound of the sandbox's proxy (threads in one JVM as",
-        "'cluster size'), not of the pipeline — but it is disclosed as",
-        "measured, not argued away.",
-        "",
-        "## Where the residual query-scaling gap comes from (controls)",
-        "",
-        "Synthetic 2→8-process controls with NO engine code "
-        "(`tools/membw_probe.py`, spawn-pool, per-process workloads, "
-        "warm-up outside the timed window):",
-        "",
-        "| workload | agg @2proc | agg @8proc | 2→8 efficiency |",
-        "|---|---|---|---|",
-    ] + ([
-        f"| streaming triad (DRAM bandwidth) | {probe['stream']['agg_2proc']} GiB/s | {probe['stream']['agg_8proc']} GiB/s | {probe['stream']['eff_2_to_8']} |",
-        f"| register/ALU loop (compute) | {probe['compute']['agg_2proc']} | {probe['compute']['agg_8proc']} | {probe['compute']['eff_2_to_8']} |",
-        f"| random gather, 8 MiB/proc working set (LLC-share shape) | {probe['gather_8mb']['agg_2proc']} M/s | {probe['gather_8mb']['agg_8proc']} M/s | **{probe['gather_8mb']['eff_2_to_8']}** |",
-        f"| random gather, 64 MiB/proc working set (DRAM-resident) | {probe['gather_64mb']['agg_2proc']} M/s | {probe['gather_64mb']['agg_8proc']} M/s | {probe['gather_64mb']['eff_2_to_8']} |",
-    ] if probe else ["(probe unavailable this run)"]) + [
-        "",
-        "Streaming bandwidth and pure compute both scale ~1.0 on this box,",
-        "so neither is the limiter. The one workload that does NOT scale is",
-        "a random gather whose per-process hot set fits the 2-process SHARE",
-        "of the last-level cache but not the 8-process share — the exact",
-        "shape of BM25 scoring (posting gathers + accumulator",
-        "scatter-adds over per-shard hot sets of a few MB). The engine's",
-        "warm sharded row lands on the same ceiling as that control, i.e.",
-        "the residual is LLC-CAPACITY SHARING among co-located processes —",
-        "a single-box artifact. Real N→4N EXECUTORS (the north rule's",
-        "deployment) hold per-executor LLC and DRAM constant as the",
-        "cluster grows; the per-executor working set here is constant by",
-        "construction (each task scores against its own shard), so this",
-        "penalty does not exist on a real cluster. A Spark-free control of",
-        "the exact task bodies (8 shard-scoring processes via",
-        "multiprocessing) measured the same ceiling, ruling out the Spark",
-        "layer.",
         "",
         "## Which query row is the production shape (and why three rows)",
         "",
@@ -552,11 +373,7 @@ def main():
         "byte-identical work) and the one-exchange merge; runB added the",
         "CPU spin probe and the merge fix; runC added the fault probe and",
         "the 8g driver heap, which eliminated the sporadic in-suite 60-q",
-        "collapse (spread 11.15× → ~1.2×). The fault traces show the",
-        "remaining 2→8 asymmetry directly: fault p90 is 81-240 ms during",
-        "local[8] windows vs 34-45 ms during local[2] windows — 8-wide",
-        "concurrent fresh-page demand itself degrades this guest's page",
-        "backing, a tax four real nodes would not share.",
+        "collapse (spread 11.15× → ~1.2×).",
         "",
         "| run | build eff | sharded warm eff | 60-q spread @8 | probes | attempts |",
         "|---|---|---|---|---|---|",
