@@ -1,6 +1,5 @@
 from tesserae_ng_spark.index.build import (
     prepare_docs,
-    tokens_stream,
     term_doc_table,
     docs_table,
     corpus_stats,
@@ -8,7 +7,6 @@ from tesserae_ng_spark.index.build import (
 
 __all__ = [
     "prepare_docs",
-    "tokens_stream",
     "term_doc_table",
     "docs_table",
     "corpus_stats",

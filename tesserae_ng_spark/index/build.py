@@ -162,14 +162,6 @@ def term_doc_decoded(prepared: DataFrame) -> DataFrame:
     return td.withColumn("positions", _decode("positions"))
 
 
-def tokens_stream(prepared: DataFrame) -> DataFrame:
-    """(doc_id, term, pos) token-occurrence stream (diagnostics/oracles)."""
-    td = term_doc_decoded(prepared)
-    return td.select(
-        "doc_id", "term", F.explode("positions").alias("pos")
-    )
-
-
 def corpus_stats(docs: DataFrame) -> DataFrame:
     """Single-row (n_docs, avg_dl, total_tokens); broadcast at query time."""
     return docs.agg(

@@ -4,7 +4,9 @@ A single query must not pay JVM/job-scheduling latency (the reference
 serves queries from a always-warm Solr core), so the read path is
 pyarrow.dataset with predicate pushdown:
 
-- ``bucket = pmod(xxhash64(term), n_buckets)`` prunes hive partitions,
+- each term's dictionary row carries its postings ``bucket`` (the
+  builder's ``pmod(xxhash64(term), n_buckets)``), which prunes hive
+  partitions,
 - ``term IN (...)`` prunes parquet row groups (blocks were written sorted
   by term within each bucket partition).
 
@@ -25,8 +27,9 @@ from tesserae_ng_spark.index.codec import delta_decode_ids, varint_decode
 
 
 def _xxhash64_str(s: str) -> int:
-    """Spark-compatible xxhash64(string, seed=42) — needed to compute the
-    bucket of a term without a JVM. Pure-Python XXH64 over UTF-8 bytes."""
+    """Spark-compatible xxhash64(string, seed=42) without a JVM.
+    Pure-Python XXH64 over UTF-8 bytes. The reader takes buckets from the
+    dictionary, so only callers reproducing Spark's hash need this."""
     P1 = 0x9E3779B185EBCA87
     P2 = 0xC2B2AE3D27D4EB4F
     P3 = 0x165667B19E3779F9
@@ -107,8 +110,7 @@ class TermPostings:
     def __init__(
         self, term: str, df: int, cf: int, max_score: float, *,
         blk_salt, blk_id, blk_n_docs, blk_first, blk_last, blk_max_score,
-        blk_max_tf=None, blk_min_dl=None, payloads=None,
-        loader=None, bucket=None,
+        blk_max_tf, blk_min_dl, payloads=None, loader=None, bucket=None,
     ):
         self.term = term
         self.df = df
@@ -120,8 +122,7 @@ class TermPostings:
         self.blk_first = blk_first
         self.blk_last = blk_last
         self.blk_max_score = blk_max_score
-        # stats-free bound ingredients (None on pre-v2 indexes → WAND
-        # under overridden stats unavailable, exhaustive scorers exact)
+        # stats-free bound ingredients (WAND under overridden stats)
         self.blk_max_tf = blk_max_tf
         self.blk_min_dl = blk_min_dl
         n = int(blk_id.size)
@@ -381,7 +382,7 @@ class TermPostings:
 
 _META_COLS = (
     "term", "salt", "block_id", "n_docs", "block_first_doc",
-    "block_last_doc", "block_max_score",
+    "block_last_doc", "block_max_score", "block_max_tf", "block_min_dl",
 )
 _PAYLOAD_COLS = ("doc_ids", "tfs", "dls")
 
@@ -418,11 +419,17 @@ class IndexReader:
             self.stats_mtime_ns = os.fstat(f.fileno()).st_mtime_ns
         self.n_docs = self.stats["n_docs"]
         self.avg_dl = self.stats["avg_dl"]
-        self.n_buckets = self.stats["n_buckets"]
         self._dict_ds = ds.dataset(os.path.join(index_dir, "dictionary"))
         self._post_ds = ds.dataset(
             os.path.join(index_dir, "postings"), partitioning="hive"
         )
+        # every writer stores the stats-free WAND bounds; an index without
+        # them predates the format the scorers assume
+        if not {"block_max_tf", "block_min_dl"} <= set(self._post_ds.schema.names):
+            raise ValueError(
+                f"{index_dir}: postings predate block_max_tf/block_min_dl; "
+                "rebuild the index"
+            )
         # small dictionaries (≤ dict_pin_max_terms) are cheaper to pin in
         # memory than to filter-scan per query; web-scale vocabularies fall
         # back to pushdown reads (parquet row-group stats on the
@@ -454,33 +461,19 @@ class IndexReader:
         lazy-I/O pins (payload_blocks_loaded) are unaffected unless the
         caller asks to warm."""
         budget = budget_mb * (1 << 20)
-        if self._dict_cache is not None:
-            # pinned dictionaries are bounded by dict_pin_max_terms, so a
-            # Python sort over the cache is fine
-            items = [
-                (r["term"], int(r["df"])) for r in self._dict_cache.values()
-            ]
-            items.sort(key=lambda p: (-p[1], p[0]))
-            dfs = np.array([d for _, d in items], dtype=np.float64)
-            terms_sorted = [t for t, _ in items]
-            order = None
-            tbl = None
-        else:
-            # web-scale fallback (VERDICT r5 #4): the whole-vocabulary
-            # sort and the budget prefix cut stay in Arrow/numpy; only
-            # the CHOSEN head terms ever materialize as Python objects
-            # (a 10^8-term dictionary must not become a Python list at
-            # service open)
-            tbl = self._dict_ds.to_table(columns=["term", "df"])
-            order = pc.sort_indices(
-                tbl, sort_keys=[("df", "descending"), ("term", "ascending")]
-            )
-            dfs = (
-                pc.take(tbl.column("df"), order)
-                .to_numpy(zero_copy_only=False)
-                .astype(np.float64)
-            )
-            terms_sorted = None
+        # the whole-vocabulary sort and the budget prefix cut stay in
+        # Arrow/numpy; only the CHOSEN head terms ever materialize as
+        # Python objects (a 10^8-term dictionary must not become a Python
+        # list at service open)
+        tbl = self._dict_ds.to_table(columns=["term", "df"])
+        order = pc.sort_indices(
+            tbl, sort_keys=[("df", "descending"), ("term", "ascending")]
+        )
+        dfs = (
+            pc.take(tbl.column("df"), order)
+            .to_numpy(zero_copy_only=False)
+            .astype(np.float64)
+        )
         # prefix-budget rule (≡ the old greedy loop): always take the top
         # term, then extend while cumulative estimated decode bytes fit
         cum = np.cumsum(dfs * 24.0)
@@ -490,10 +483,7 @@ class IndexReader:
         if n == 0:
             return {"terms": 0, "est_mb": 0.0}
         est = float(cum[n - 1])
-        if terms_sorted is not None:
-            chosen = terms_sorted[:n]
-        else:
-            chosen = pc.take(tbl.column("term"), order[:n]).to_pylist()
+        chosen = pc.take(tbl.column("term"), order[:n]).to_pylist()
         tps = self.fetch(chosen)
         self.ensure_payloads(tps.values())
         for tp in tps.values():
@@ -541,18 +531,13 @@ class IndexReader:
         dic = self.lookup(terms)
         if not dic:
             return {}
-        buckets = sorted({int(_xxhash64_str(t) % self.n_buckets) for t in dic})
-        names = set(self._post_ds.schema.names)
-        has_sf = "block_max_tf" in names  # pre-v2 indexes lack these
-        meta_cols = _META_COLS + (
-            ("block_max_tf", "block_min_dl") if has_sf else ()
-        )
+        buckets = sorted({r["bucket"] for r in dic.values()})
         tbl = self._post_ds.to_table(
             filter=(
                 pc.field("bucket").isin(buckets)
                 & pc.field("term").isin(sorted(dic))
             ),
-            columns=list(meta_cols),
+            columns=list(_META_COLS),
         )
         # struct-of-arrays construction (VERDICT r5 #5): group the scan by
         # term (one C-side dictionary-encode) and order blocks by packed
@@ -575,8 +560,8 @@ class IndexReader:
             tbl.column("block_max_score").combine_chunks()
             .to_numpy(zero_copy_only=False).astype(np.float64)
         )
-        mts = _i64("block_max_tf") if has_sf else None
-        mds = _i64("block_min_dl") if has_sf else None
+        mts = _i64("block_max_tf")
+        mds = _i64("block_min_dl")
         enc = tbl.column("term").combine_chunks().dictionary_encode()
         codes = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
         tnames = enc.dictionary.to_pylist()
@@ -592,10 +577,8 @@ class IndexReader:
                 blk_salt=salts[rows], blk_id=bids[rows],
                 blk_n_docs=nds[rows], blk_first=firsts[rows],
                 blk_last=lasts[rows], blk_max_score=maxs[rows],
-                blk_max_tf=mts[rows] if has_sf else None,
-                blk_min_dl=mds[rows] if has_sf else None,
-                loader=self._load_payloads,
-                bucket=int(_xxhash64_str(t) % self.n_buckets),
+                blk_max_tf=mts[rows], blk_min_dl=mds[rows],
+                loader=self._load_payloads, bucket=dic[t]["bucket"],
             )
         empty = np.empty(0, dtype=np.int64)
         for t in dic:
@@ -605,10 +588,8 @@ class IndexReader:
                     blk_salt=empty, blk_id=empty, blk_n_docs=empty,
                     blk_first=empty, blk_last=empty,
                     blk_max_score=np.empty(0, dtype=np.float64),
-                    blk_max_tf=empty if has_sf else None,
-                    blk_min_dl=empty if has_sf else None,
-                    loader=self._load_payloads,
-                    bucket=int(_xxhash64_str(t) % self.n_buckets),
+                    blk_max_tf=empty, blk_min_dl=empty,
+                    loader=self._load_payloads, bucket=dic[t]["bucket"],
                 )
         return out
 

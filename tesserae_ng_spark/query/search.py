@@ -18,6 +18,12 @@ re-expressed over positional postings):
               score = ln((Σ_t 1/tf_t) / max(d, 1)) with d = minimal span
               covering one occurrence of every term — the Tesserae
               distance-weighted formula (Forstall et al. 2014 shape).
+
+Both match every doc of a query in one vectorized pass: the candidate
+docs' positions pack into (row, position) int64 keys whose position width
+adapts to the longest candidate doc (_row_pos_keys), so there is no
+per-doc path. The scalar per-doc ``_phrase_count`` / ``_min_cover_span``
+stay only as test references.
 """
 
 from __future__ import annotations
@@ -30,11 +36,7 @@ import numpy as np
 
 from tesserae_ng_spark.functions.analysis import analyze_query
 from tesserae_ng_spark.query.reader import IndexReader, TermPostings
-from tesserae_ng_spark.query.wand import (
-    StatsFreeBoundsUnavailable,
-    bm25_global_topk,
-    wand_topk,
-)
+from tesserae_ng_spark.query.wand import bm25_global_topk, wand_topk
 from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 
 # below this many total postings, vectorized exact scoring (the threshold
@@ -76,7 +78,10 @@ class Searcher:
         global index. Block-max WAND runs under overridden stats too: the
         index stores stats-free per-block (max_tf, min_dl) and bounds are
         recomputed under the query's (n_docs, avg_dl, df) — see
-        TermIterator; only a pre-v2 index falls back to exhaustive."""
+        TermIterator.
+
+        phrase / proximity run one vectorized path for every doc
+        (phrase_match_arrays / proximity_match_arrays)."""
         terms = analyze_query(query_text, self.lang)
         if not terms:
             return []
@@ -97,23 +102,15 @@ class Searcher:
             # - above DENSE_POSTINGS_CUTOFF, block-max WAND: huge unions
             #   where skipping pays. Under overridden (sharded/global)
             #   stats it runs on stats-free bounds recomputed from
-            #   per-block (max_tf, min_dl); a pre-v2 index without that
-            #   metadata raises StatsFreeBoundsUnavailable and falls
-            #   through to the kernel below.
+            #   per-block (max_tf, min_dl), which every index stores.
             # - otherwise the threshold kernel (bm25_global_topk): per-term
             #   impact-ordered scores, cached per stats key; it scores the
             #   union of every term's top-m docs and deepens m ×4 until
             #   the k-th score is strictly above the fold of the lists'
             #   depth-m scores, which no unread doc can reach.
-            top = None
             if sum(tp.df for tp in fetched.values()) > DENSE_POSTINGS_CUTOFF:
-                try:
-                    top = wand_topk(
-                        fetched, n_docs, avg_dl, k, df_override=dfo
-                    )
-                except StatsFreeBoundsUnavailable:
-                    top = None  # old index + overridden stats → kernel
-            if top is None:
+                top = wand_topk(fetched, n_docs, avg_dl, k, df_override=dfo)
+            else:
                 # the kernel decodes every block on a cache miss —
                 # bulk-load all payloads in one scan, not one per term
                 self.reader.ensure_payloads(fetched.values())
@@ -141,80 +138,48 @@ class Searcher:
 
 
 # ---------------------------------------------------------------------------
-# conjunctive positional iteration
+# conjunctive positional matching
 # ---------------------------------------------------------------------------
 
 
-def _conjunctive_matches(tps: list[TermPostings]):
-    """Per-doc conjunctive iteration with positions (generic-arity path).
+def _row_pos_keys(decoded, margin):
+    """→ (keys, bits): per term, (common-row, position) packed into one
+    sortable int64 key ``(row << bits) | pos``. Rows (not raw doc ids —
+    those span the full int64 range) keep the packing small: row <
+    n_common. ``bits`` adapts to the query's candidate positions, so one
+    vectorized path covers every doc, however long.
 
-    Yields (doc_id, dl, [(tf_t, positions_t) per term]) for docs containing
-    ALL terms. Positions slice out of the flat per-term arrays by offset —
-    no per-posting objects exist until a doc actually matches.
-    """
-    got = _intersect_decoded(tps)
-    if got is None:
-        return
-    decoded, idxs, common = got
-    for row, doc in enumerate(common):
-        per_term = []
-        dl = 0
-        for t, (ids, tfs, dls, pos_flat, pos_offs) in enumerate(decoded):
-            i = int(idxs[t][row])
-            dl = int(dls[i])
-            o = int(pos_offs[i])
-            per_term.append((int(tfs[i]), pos_flat[o : o + int(tfs[i])]))
-        yield int(doc), dl, per_term
+    ``bits = (max_pos + margin).bit_length()`` puts every position below
+    2^bits - margin. Callers pass margin = query arity so that the ±i
+    offset arithmetic in _phrase_rows_vectorized can neither overflow a
+    position into the next row's bits (pos + i ≥ 2^bits) NOR let an
+    underflowed start key (keys[j0] - j0 borrowing from the row bits when
+    pos < j0) collide with a legal term-0 key — a wrapped key carries
+    position bits ≥ 2^bits - arity, which no real key has.
 
-
-_ROW_BITS = np.int64(21)
-_ROW_SHIFT = np.int64(1) << _ROW_BITS  # positions < 2^21 (dl < 2M tokens)
-# keys are nonnegative (row ≥ 0, pos ≥ 0), so `key >> _ROW_BITS` ==
-# `key // _ROW_SHIFT` — and the shift is several× cheaper than 64-bit
-# integer division on the hot positional paths
-
-
-class PositionOverflow(Exception):
-    """A document's token position exceeds the packed-key budget (≥ 2M
-    tokens in one doc); callers fall back to the per-doc path."""
-
-
-def _row_pos_keys(decoded, idxs, n_common, margin=0):
-    """Per term: pack (common-row, position) into one sortable int64 key.
-    Rows (not raw doc ids — those span the full int64 range) make the
-    packing safe: row < n_common, pos < 2^21. Positions gather out of the
-    flat array with one vectorized fancy-index — no per-doc objects.
-    Raises PositionOverflow when any position won't fit the key budget
-    minus ``margin`` (otherwise position bits would silently corrupt row
-    bits). Callers pass margin = query arity so that the ±i offset
-    arithmetic in _phrase_rows_vectorized can neither overflow a position
-    into the next row's bits (pos + i ≥ 2^21) NOR let an underflowed
-    start key (keys[j0] - j0 borrowing from the row bits when pos < j0)
-    collide with a legal term-0 key — a wrapped key carries position
-    bits ≥ 2^21 - arity, which no accepted key has."""
+    ``decoded`` holds candidate_positions' (tfs, dls, pos_flat, pos_offs)
+    per term: pos_flat is already in candidate order with pos_offs ==
+    cumsum(tfs) - tfs, so only the row ids need expanding."""
     from tesserae_ng_spark.index.codec import expand_segment_values
 
-    keys = []
-    for t, (ids, tfs, dls, pos_flat, pos_offs) in enumerate(decoded):
-        sel = idxs[t]
-        counts = tfs[sel]
-        total = int(counts.sum())
-        run_starts = np.cumsum(counts) - counts
-        rows = expand_segment_values(
-            np.arange(len(sel), dtype=np.int64), run_starts, total
+    max_pos = max(int(pos.max()) for _, _, pos, _ in decoded)
+    bits = (max_pos + margin).bit_length()
+    n_rows = decoded[0][0].size
+    # the span sweeps pack a term ordinal below the key: positions are
+    # int32 (bits ≤ 32), so this only trips past 2^29 candidate docs
+    tbits = max(1, (len(decoded) - 1).bit_length())
+    if n_rows.bit_length() + bits + tbits > 63:
+        raise ValueError(
+            f"{n_rows} candidate docs x {bits} position bits overflow "
+            "the packed int64 key"
         )
-        # flat gather: start offset of each selected posting + within-run arange
-        gather = expand_segment_values(
-            pos_offs[sel] - run_starts, run_starts, total
-        ) + np.arange(total, dtype=np.int64)
-        pos_sel = pos_flat[gather].astype(np.int64)
-        cap = int(_ROW_SHIFT) - int(margin)
-        if pos_sel.size and int(pos_sel.max()) >= cap:
-            raise PositionOverflow(
-                f"position {int(pos_sel.max())} >= {cap}"
-            )
-        keys.append(rows * _ROW_SHIFT + pos_sel)
-    return keys
+    keys = []
+    for _, _, pos, offs in decoded:
+        rows = expand_segment_values(
+            np.arange(n_rows, dtype=np.int64), offs, pos.size
+        )
+        keys.append((rows << bits) | pos.astype(np.int64))
+    return keys, bits
 
 
 def _isin_sorted(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -256,7 +221,7 @@ def _sorted_group_starts(rows: np.ndarray) -> np.ndarray:
     return np.concatenate((np.zeros(1, dtype=np.int64), starts))
 
 
-def _phrase_rows_vectorized(keys: list[np.ndarray]):
+def _phrase_rows_vectorized(keys: list[np.ndarray], bits: int):
     """→ (rows, phrase_tf) of common-rows containing the exact phrase.
     Chained sorted-membership over packed keys: start positions where
     term_i sits at pos+i for every i. Fully vectorized across all docs."""
@@ -266,8 +231,8 @@ def _phrase_rows_vectorized(keys: list[np.ndarray]):
     # phrase that replaces an O(head-positions) first pass with an
     # O(tail-positions) one. Underflowed starts (occurrence index < j0,
     # so the packed key slips into the previous row) can never survive:
-    # the _row_pos_keys margin guard rejects positions ≥ 2^21 - arity, so
-    # a wrapped key's position bits (≥ 2^21 - j0) match no accepted key.
+    # _row_pos_keys sizes ``bits`` so every position is < 2^bits - arity,
+    # so a wrapped key's position bits (≥ 2^bits - j0) match no real key.
     order = sorted(range(len(keys)), key=lambda j: keys[j].size)
     j0 = order[0]
     cur = keys[j0] - j0
@@ -275,13 +240,13 @@ def _phrase_rows_vectorized(keys: list[np.ndarray]):
         cur = _intersect_sorted_unique(cur + i, keys[i]) - i
         if cur.size == 0:
             return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-    rows = cur >> _ROW_BITS  # sorted (cur is sorted)
+    rows = cur >> bits  # sorted (cur is sorted)
     starts = _sorted_group_starts(rows)
     tf = np.diff(np.concatenate((starts, [rows.size])))
     return rows[starts], tf
 
 
-def _min_span_2term_vectorized(k1: np.ndarray, k2: np.ndarray):
+def _min_span_2term_vectorized(k1: np.ndarray, k2: np.ndarray, bits: int):
     """→ (rows, min |p1-p2| per row) for two packed-key arrays.
     The minimal cross-set distance is realized by an adjacent pair in the
     merged sorted order (classic two-pointer argument), so one argsort +
@@ -289,16 +254,15 @@ def _min_span_2term_vectorized(k1: np.ndarray, k2: np.ndarray):
     # k1 and k2 arrive sorted: pack the origin term into bit 0 and let ONE
     # stable sort merge the two pre-sorted runs (timsort gallops them in
     # O(n) sequential passes — measured faster than two same-size
-    # searchsorted probe passes plus their random scatter stores). Keys are
-    # row·2^21 + pos with row < n_common, so the 1-bit shift cannot
-    # overflow; ties (same key, both terms) keep term order 0-then-1,
+    # searchsorted probe passes plus their random scatter stores).
+    # _row_pos_keys leaves room for the 1-bit shift; ties (same key, both terms) keep term order 0-then-1,
     # identical to the old left/right-sided searchsorted merge.
     v = np.sort(
         np.concatenate(((k1 << 1), (k2 << 1) | 1)), kind="stable"
     )
     ks = v >> 1
     fs = v & 1
-    rows_all = ks >> _ROW_BITS
+    rows_all = ks >> bits
     same_row = rows_all[1:] == rows_all[:-1]
     diff_term = fs[1:] != fs[:-1]
     adj = same_row & diff_term
@@ -312,7 +276,7 @@ def _min_span_2term_vectorized(k1: np.ndarray, k2: np.ndarray):
     return rows[starts], np.minimum.reduceat(spans, starts)
 
 
-def _min_cover_span_vectorized(keys: list[np.ndarray]):
+def _min_cover_span_vectorized(keys: list[np.ndarray], bits: int):
     """→ (rows, minimal token span covering ≥1 occurrence of EVERY term per
     row) — generic arity, fully vectorized across all docs at once.
 
@@ -324,8 +288,8 @@ def _min_cover_span_vectorized(keys: list[np.ndarray]):
     T = len(keys)
     # pack the term ordinal into the low bits and merge the pre-sorted
     # runs with ONE stable value sort (timsort gallops sorted runs; an
-    # argsort would pay an extra permutation gather). Keys are
-    # row·2^21 + pos < 2^43, so a few term bits cannot overflow.
+    # argsort would pay an extra permutation gather). _row_pos_keys
+    # leaves room for the term bits.
     tbits = max(1, (T - 1).bit_length())
     v = np.sort(
         np.concatenate(
@@ -339,8 +303,8 @@ def _min_cover_span_vectorized(keys: list[np.ndarray]):
     for t in range(T):
         kt = np.where(ts == t, ks, np.int64(-1))
         np.minimum(mins, np.maximum.accumulate(kt), out=mins)
-    rows_i = ks >> _ROW_BITS
-    valid = (mins >= 0) & (mins >> _ROW_BITS == rows_i)
+    rows_i = ks >> bits
+    valid = (mins >= 0) & (mins >> bits == rows_i)
     if not valid.any():
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     spans = ks[valid] - mins[valid]  # same row ⇒ pure position difference
@@ -350,7 +314,9 @@ def _min_cover_span_vectorized(keys: list[np.ndarray]):
 
 
 def _phrase_count(pos_lists: list[np.ndarray]) -> int:
-    """Number of start positions where terms occur consecutively."""
+    """Number of start positions where terms occur consecutively in one
+    doc — the scalar reference _phrase_rows_vectorized is tested against
+    (no engine path calls it)."""
     starts = pos_lists[0]
     for i, pl in enumerate(pos_lists[1:], start=1):
         need = starts + i
@@ -362,7 +328,9 @@ def _phrase_count(pos_lists: list[np.ndarray]) -> int:
 
 
 def _min_cover_span(pos_lists: list[np.ndarray]) -> int:
-    """Minimal token span containing ≥1 occurrence of every term."""
+    """Minimal token span containing ≥1 occurrence of every term in one
+    doc (-1 if a term is absent) — the scalar reference the span sweeps
+    are tested against (no engine path calls it)."""
     merged = []
     for ti, pl in enumerate(pos_lists):
         merged.extend((int(p), ti) for p in pl)
@@ -386,24 +354,10 @@ def _min_cover_span(pos_lists: list[np.ndarray]) -> int:
     return best if best is not None else -1
 
 
-def _intersect_decoded(tps: list[TermPostings]):
-    """→ (decoded, idxs, common) or None when the conjunction is empty.
-    FULL decode of every term's positions — only the PositionOverflow
-    fallback uses this; the main path is _candidate_decoded."""
-    decoded = [tp.decode_full(with_positions=True) for tp in tps]
-    common = decoded[0][0]
-    for ids, *_ in decoded[1:]:
-        # both sides sorted → membership mask beats np.intersect1d, which
-        # re-sorts the concatenation even under assume_unique
-        common = common[_isin_sorted(common, ids)]
-        if common.size == 0:
-            return None
-    idxs = [np.searchsorted(d[0], common) for d in decoded]
-    return decoded, idxs, common
-
-
 def _candidate_decoded(tps: list[TermPostings]):
-    """→ (decoded, idxs, common) like _intersect_decoded, but positions are
+    """→ (decoded, common) or None when the conjunction is empty: the
+    conjunction's doc ids ``common`` and, per term, candidate_positions'
+    (tfs, dls, pos_flat, pos_offs) aligned with them. Positions are
     gathered for the CANDIDATE docs only: intersect on doc ids first
     (ids/tfs/dls payloads — cheap), then decode position payloads from just
     the blocks holding candidates (TermPostings.candidate_positions). A
@@ -422,12 +376,7 @@ def _candidate_decoded(tps: list[TermPostings]):
         common = _intersect_sorted_unique(common, ids_lists[t])
         if common.size == 0:
             return None
-    decoded = []
-    for tp in tps:
-        tfs, dls, pos_flat, pos_offs = tp.candidate_positions(common)
-        decoded.append((common, tfs, dls, pos_flat, pos_offs))
-    idxs = [np.arange(common.size, dtype=np.int64)] * len(tps)
-    return decoded, idxs, common
+    return [tp.candidate_positions(common) for tp in tps], common
 
 
 _EMPTY3 = (
@@ -445,29 +394,12 @@ def phrase_match_arrays(ordered_tps: list[TermPostings]):
     got = _candidate_decoded(ordered_tps)
     if got is None:
         return _EMPTY3
-    decoded, idxs, common = got
-    try:
-        keys = _row_pos_keys(
-            decoded, idxs, common.size, margin=len(ordered_tps)
-        )
-        rows, tfs = _phrase_rows_vectorized(keys)
-        if rows.size == 0:
-            return _EMPTY3
-        docs = common[rows]
-        dls = decoded[0][2][idxs[0][rows]]
-    except PositionOverflow:
-        # pathological (>2M-token) docs: per-doc path, same semantics
-        hits = [
-            (doc, dl, c)
-            for doc, dl, per_term in _conjunctive_matches(ordered_tps)
-            if (c := _phrase_count([p for _, p in per_term]))
-        ]
-        if not hits:
-            return _EMPTY3
-        docs = np.array([h[0] for h in hits], dtype=np.int64)
-        dls = np.array([h[1] for h in hits], dtype=np.int64)
-        tfs = np.array([h[2] for h in hits], dtype=np.int64)
-    return docs, tfs, dls
+    decoded, common = got
+    keys, bits = _row_pos_keys(decoded, margin=len(ordered_tps))
+    rows, tfs = _phrase_rows_vectorized(keys, bits)
+    if rows.size == 0:
+        return _EMPTY3
+    return common[rows], tfs, decoded[0][1][rows]
 
 
 def phrase_topk(ordered_tps: list[TermPostings], n_docs: int, avg_dl: float,
@@ -493,46 +425,27 @@ def proximity_match_arrays(tps: list[TermPostings], window: int):
     got = _candidate_decoded(tps)
     if got is None:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    decoded, idxs, common = got
-    try:
-        keys = _row_pos_keys(decoded, idxs, common.size, margin=len(tps))
-    except PositionOverflow:
-        keys = None  # pathological docs → per-doc path below
-    if keys is not None:
-        if len(tps) == 2:
-            rows, spans = _min_span_2term_vectorized(keys[0], keys[1])
-        else:
-            rows, spans = _min_cover_span_vectorized(keys)
-        keep = spans <= window
-        rows, spans = rows[keep], spans[keep]
-        if rows.size == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        inv_f = sum(
-            1.0 / decoded[t][1][idxs[t][rows]] for t in range(len(tps))
-        )
-        scores = np.log(inv_f / np.maximum(spans, 1))
-        return common[rows], scores
-    scored = []
-    for doc, _dl, per_term in _conjunctive_matches(tps):
-        d = _min_cover_span([p for _, p in per_term])
-        if d < 0 or d > window:
-            continue
-        inv_f = sum(1.0 / tf for tf, _ in per_term)
-        scored.append((doc, math.log(inv_f / max(d, 1))))
-    if not scored:
+    decoded, common = got
+    keys, bits = _row_pos_keys(decoded, margin=len(tps))
+    if len(tps) == 2:
+        rows, spans = _min_span_2term_vectorized(keys[0], keys[1], bits)
+    else:
+        rows, spans = _min_cover_span_vectorized(keys, bits)
+    keep = spans <= window
+    rows, spans = rows[keep], spans[keep]
+    if rows.size == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    return (
-        np.array([d for d, _ in scored], dtype=np.int64),
-        np.array([s for _, s in scored], dtype=np.float64),
-    )
+    inv_f = sum(1.0 / tfs[rows] for tfs, *_ in decoded)
+    scores = np.log(inv_f / np.maximum(spans, 1))
+    return common[rows], scores
 
 
 def proximity_topk(tps: list[TermPostings], window: int, k: int):
     """Proximity top-k with the Tesserae distance-weighted score.
 
-    Every arity runs fully vectorized (2-term: adjacent-pair scan; 3+:
-    per-term forward-fill cover-span sweep); the per-doc loop remains only
-    as the PositionOverflow fallback for pathological >2M-token docs."""
+    Every arity and every doc length runs fully vectorized (2-term:
+    adjacent-pair scan; 3+: per-term forward-fill cover-span sweep) over
+    width-adaptive (row, position) keys (_row_pos_keys)."""
     docs, scores = proximity_match_arrays(tps, window)
     if docs.size == 0:
         return []

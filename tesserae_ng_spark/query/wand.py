@@ -13,14 +13,13 @@ picks by the query's total postings:
   blocks on metadata where huge head-term unions make skipping pay. Lucene
   8+ runs the same algorithm, so its public semantics are the behavioral
   target.
-- otherwise, and when WAND has no valid bounds
-  (StatsFreeBoundsUnavailable): ``bm25_global_topk`` — Fagin's threshold
-  algorithm, vectorized per round, over per-term postings cached in impact
-  order. It reads the top-m of every list, scores that candidate union
-  exactly, and stops once the k-th score is strictly above the fold U of
-  the lists' scores at depth m; else m ×= 4. No doc outside the candidates
-  can reach U (float addition is monotone), and the strict ``>`` keeps
-  doc_id ties exact.
+- otherwise: ``bm25_global_topk`` — Fagin's threshold algorithm,
+  vectorized per round, over per-term postings cached in impact order. It
+  reads the top-m of every list, scores that candidate union exactly, and
+  stops once the k-th score is strictly above the fold U of the lists'
+  scores at depth m; else m ×= 4. No doc outside the candidates can reach
+  U (float addition is monotone), and the strict ``>`` keeps doc_id ties
+  exact.
 
 WAND's pruning discipline for exactness:
 - prune only when upper_bound < threshold - EPS (never on ==): a candidate
@@ -42,11 +41,6 @@ import numpy as np
 from tesserae_ng_spark.schemas import BM25_B, BM25_K1
 
 EPS = 1e-12
-
-
-class StatsFreeBoundsUnavailable(Exception):
-    """The index predates per-block (max_tf, min_dl) metadata — WAND under
-    overridden stats has no valid upper bounds; use an exhaustive scorer."""
 
 
 class TermIterator:
@@ -80,8 +74,6 @@ class TermIterator:
         self.b = b
         self._bounds = None
         if stats_free and self.n_blocks:
-            if postings.blk_max_tf is None:
-                raise StatsFreeBoundsUnavailable(postings.term)
             mt = postings.blk_max_tf.astype(np.float64)
             md = postings.blk_min_dl.astype(np.float64)
             self._bounds = self.idf * mt / (
@@ -193,8 +185,7 @@ def wand_topk(
 
     ``df_override`` maps term → GLOBAL df (sharded search): iterators run
     in stats-free mode, recomputing block bounds from (max_tf, min_dl)
-    under the given (n_docs, avg_dl, df) — raises StatsFreeBoundsUnavailable
-    on a pre-v2 index lacking that metadata.
+    under the given (n_docs, avg_dl, df).
     """
     stats_free = df_override is not None
     its = [

@@ -351,6 +351,76 @@ def test_warm_top_terms_arrow_fallback_same_selection(index_dir):
     assert fallback.warm_top_terms(1e-9)["terms"] == 1
     assert fallback.lookup([top["term"]])  # and it is fetchable
 
+    # the selection is the (-df, term) budget prefix: always the top term,
+    # then more while the estimated 24 B/posting decode cost fits
+    ranked = sorted(
+        pinned._dict_cache.values(), key=lambda r: (-r["df"], r["term"])
+    )
+
+    def prefix(budget_mb):
+        out, used = [], 0.0
+        for r in ranked:
+            used += r["df"] * 24.0
+            if out and used > budget_mb * (1 << 20):
+                break
+            out.append(r["term"])
+        return out
+
+    for budget_mb in (1e-9, 0.001, 0.01, 64.0):
+        r = IndexReader(index_dir)
+        r.warm_top_terms(budget_mb)
+        assert sorted(r._term_cache) == sorted(prefix(budget_mb)), budget_mb
+    assert len(prefix(0.01)) < len(prefix(64.0))  # the budgets bind
+
+
+def test_reader_takes_buckets_from_dictionary(index_dir, monkeypatch):
+    """The reader prunes postings partitions with each term's dictionary
+    ``bucket``; it never re-derives the bucket by hashing the term."""
+    from tesserae_ng_spark.query import reader as reader_mod
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    cases = [(q, mode) for q in QUERIES for mode in ("bm25", "phrase", "proximity")]
+    want = [
+        [(h.doc_id, h.score) for h in Searcher(index_dir).search(q, k=10, mode=m)]
+        for q, m in cases
+    ]
+    assert any(want)
+
+    def no_hash(s):
+        raise AssertionError("reader hashed a term")
+
+    monkeypatch.setattr(reader_mod, "_xxhash64_str", no_hash)
+    s = Searcher(index_dir)
+    got = [
+        [(h.doc_id, h.score) for h in s.search(q, k=10, mode=m)]
+        for q, m in cases
+    ]
+    assert got == want
+    # the pushdown (unpinned) dictionary rows carry the bucket too
+    s.reader = IndexReader(index_dir, dict_pin_max_terms=0)
+    assert [(h.doc_id, h.score) for h in s.search(QUERIES[0], k=10)] == want[0]
+
+
+def test_reader_rejects_postings_without_stats_free_bounds(index_dir, tmp_path):
+    """An index whose postings lack block_max_tf/block_min_dl predates the
+    format WAND's stats-free bounds need: opening it fails at once."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from tesserae_ng_spark.query.reader import IndexReader
+
+    d = str(tmp_path / "old")
+    shutil.copytree(index_dir, d)
+    files = glob.glob(os.path.join(d, "postings", "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        tbl = pq.ParquetFile(f).read()
+        pq.write_table(tbl.drop(["block_max_tf", "block_min_dl"]), f)
+    with pytest.raises(ValueError, match="block_max_tf/block_min_dl"):
+        IndexReader(d)
+    IndexReader(index_dir)  # the untouched original still opens
+
 
 def test_get_searcher_replaces_rebuilt_index(index_dir, tmp_path):
     """An index rebuilt in place (stats.json rewritten) must not keep being

@@ -3,7 +3,7 @@
 import math
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tesserae_ng_spark.index.inmem import build_term_postings
@@ -141,7 +141,6 @@ def test_multiterm_proximity_matches_brute(docs, terms, window):
 
 def test_cover_span_vectorized_matches_reference():
     from tesserae_ng_spark.query.search import (
-        _ROW_SHIFT,
         _min_cover_span,
         _min_cover_span_vectorized,
         _min_span_2term_vectorized,
@@ -158,24 +157,24 @@ def test_cover_span_vectorized_matches_reference():
             for r in range(n_rows):
                 ps = sorted(rng.choice(200, size=rng.randint(1, 6), replace=False))
                 per_row[r][t] = np.array(ps)
-                ks.extend(int(r) * int(_ROW_SHIFT) + int(p) for p in ps)
+                ks.extend(int(r) * (1 << 21) + int(p) for p in ps)
             keys.append(np.array(sorted(ks), dtype=np.int64))
-        rows, spans = _min_cover_span_vectorized(keys)
+        rows, spans = _min_cover_span_vectorized(keys, bits=21)
         got = dict(zip(rows.tolist(), spans.tolist()))
         for r in range(n_rows):
             assert got.get(r, -1) == _min_cover_span(per_row[r])
         if T == 2:
-            r2, s2 = _min_span_2term_vectorized(keys[0], keys[1])
+            r2, s2 = _min_span_2term_vectorized(keys[0], keys[1], bits=21)
             assert r2.tolist() == rows.tolist()
             assert s2.tolist() == spans.tolist()
 
 
 def test_position_overflow_falls_back_to_per_doc():
-    """Docs with positions beyond the packed-key budget (>= 2^21) must take
-    the per-doc path and return the same matches, not corrupt keys."""
-    from tesserae_ng_spark.query.search import _ROW_SHIFT
-
-    big = int(_ROW_SHIFT) + 10  # a "2M-token" document's tail positions
+    """Docs with positions >= 2^21 (past the old fixed 21-bit key width,
+    where a per-doc fallback used to take over) must match exactly as
+    short docs do: the key width widens to fit them instead of
+    corrupting row bits."""
+    big = (1 << 21) + 10  # a "2M-token" document's tail positions
     docs_pos = {
         1: {"a": [big], "b": [big + 1]},          # adjacent at huge offsets
         2: {"a": [5], "b": [6]},                   # normal doc
@@ -204,11 +203,10 @@ def test_phrase_underflow_at_position_cap_boundary():
     """ADVICE r5: a legal term-0 occurrence at position 2^21 - 1 must not
     validate an underflowed phrase-start key (keys[j0] - j0 borrowing row
     bits when the smallest term sits at position < j0 in the NEXT common
-    row). The tightened margin guard (reject positions >= 2^21 - arity)
-    routes such near-cap docs to the per-doc fallback instead."""
-    from tesserae_ng_spark.query.search import _ROW_SHIFT
-
-    cap = int(_ROW_SHIFT)
+    row). _row_pos_keys sizes the key width from max position + arity, so
+    every real position sits below 2^bits - arity and no wrapped key can
+    equal one."""
+    cap = 1 << 21
     docs_pos = {
         1: {"a": [100, cap - 1], "b": [10]},  # no "a b" phrase
         2: {"a": [50], "b": [0]},             # b at pos 0 → underflow bait
@@ -229,6 +227,112 @@ def test_phrase_underflow_at_position_cap_boundary():
     }
     got = {d for d, _ in phrase_topk([tps["a"], tps["b"]], n, avg, k=10)}
     assert got == {3}
+
+
+# key widths the edge test probes: tiny, byte, the old fixed 21 bits, and
+# the int32 top
+EDGE_WIDTHS = (3, 8, 21, 30)
+
+
+@st.composite
+def edge_case(draw):
+    """(phrase terms, docs as {position: term}) with positions at the
+    width edges: 2^k - 5 .. 2^k (so 2^k - arity - 1, 2^k - arity, 2^k - 1
+    and 2^k for every arity 1-4), 2^21 + 10, 2^30, and 0-5 as underflow
+    bait for phrase starts."""
+    phrase = draw(st.lists(st.sampled_from(VOCAB), min_size=1, max_size=4))
+    k = draw(st.sampled_from(EDGE_WIDTHS))
+    pool = sorted({*range(2**k - 5, 2**k + 1), 2**21 + 10, 2**30, *range(6)})
+    docs = draw(st.lists(
+        st.dictionaries(
+            st.sampled_from(pool), st.sampled_from(VOCAB),
+            min_size=1, max_size=8,
+        ),
+        min_size=1, max_size=6,
+    ))
+    return phrase, docs
+
+
+@given(case=edge_case(), block_size=st.sampled_from([1, 2, 4]),
+       window=st.sampled_from([0, 1, 3, 2**31]))
+@example(  # the 2^3 - 1 term-0 key an underflowed "b" start wraps onto
+    case=(["a", "b"], [{2: "a", 7: "a", 4: "b"}, {5: "a", 0: "b"}]),
+    block_size=1, window=0,
+)
+@example(  # the same wrap at the old fixed width (ADVICE r5's case)
+    case=(["a", "b"], [{100: "a", 2**21 - 1: "a", 10: "b"}, {50: "a", 0: "b"}]),
+    block_size=2, window=3,
+)
+@example(  # 3-term phrase: a start at 2^8 - 2 whose +2 overflows a row
+    case=(["a", "b", "c"],
+          [{1: "a", 2**8 - 2: "a", 2**8 - 1: "b", 6: "c"},
+           {3: "a", 2: "b", 0: "c"}]),
+    block_size=4, window=2**31,
+)
+@settings(max_examples=300, deadline=None)
+def test_positional_matches_scalar_oracles_at_width_edges(
+    case, block_size, window
+):
+    """phrase_topk / proximity_topk agree doc by doc with the scalar
+    _phrase_count / _min_cover_span when positions sit at the edges of
+    the adaptive key width (_row_pos_keys). The examples fail if the
+    arity margin is left out of the width."""
+    from tesserae_ng_spark.query.search import _min_cover_span, _phrase_count
+    from tesserae_ng_spark.schemas import BM25_B, BM25_K1
+
+    phrase, doc_list = case
+    docs = {d * 7 - 3: pos_term for d, pos_term in enumerate(doc_list)}
+    dls = {d: max(pt) + 1 for d, pt in docs.items()}
+    postings = {}
+    for d, pt in docs.items():
+        per = {}
+        for p in sorted(pt):
+            per.setdefault(pt[p], []).append(p)
+        for t, ps in per.items():
+            postings.setdefault(t, []).append((d, len(ps), dls[d], ps))
+    n = len(docs)
+    avg = sum(dls.values()) / n
+    tps = {
+        t: build_term_postings(t, ps, n, avg, block_size=block_size)
+        for t, ps in postings.items()
+    }
+    if any(t not in tps for t in phrase):
+        return
+
+    def pos_lists(d, terms):
+        return [
+            np.array(sorted(p for p, x in docs[d].items() if x == t))
+            for t in terms
+        ]
+
+    want_tf = {}
+    for d in docs:
+        lists = pos_lists(d, phrase)
+        if all(pl.size for pl in lists) and (c := _phrase_count(lists)):
+            want_tf[d] = c
+    got = phrase_topk([tps[t] for t in phrase], n, avg, k=10_000)
+    assert {d for d, _ in got} == set(want_tf)
+    df = len(want_tf)
+    idf = math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+    for d, s in got:
+        tf = want_tf[d]
+        want = idf * tf / (tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dls[d] / avg))
+        assert math.isclose(s, want, rel_tol=0, abs_tol=1e-9), (d, s, want)
+
+    uniq = sorted(set(phrase))
+    want_prox = {}
+    for d in docs:
+        lists = pos_lists(d, uniq)
+        if not all(pl.size for pl in lists):
+            continue
+        span = _min_cover_span(lists)
+        if span <= window:
+            inv_f = sum(1.0 / pl.size for pl in lists)
+            want_prox[d] = math.log(inv_f / max(span, 1))
+    got_prox = dict(proximity_topk([tps[t] for t in uniq], window, k=10_000))
+    assert set(got_prox) == set(want_prox)
+    for d, s in got_prox.items():
+        assert math.isclose(s, want_prox[d], rel_tol=0, abs_tol=1e-9), d
 
 
 def test_candidate_positions_sparse_and_bulk_match_full_decode():

@@ -215,20 +215,6 @@ def test_wand_stats_free_bounds_equal_exhaustive(
         assert math.isclose(gs, ws, rel_tol=0, abs_tol=1e-9), (gd, gs, ws)
 
 
-def test_wand_stats_free_raises_without_metadata():
-    from tesserae_ng_spark.query.wand import StatsFreeBoundsUnavailable
-
-    corpus = {d: {"a": 1 + d % 3} for d in range(20)}
-    dls = {d: sum(t.values()) for d, t in corpus.items()}
-    tps, n, avg = make_index(corpus, dls, 4)
-    tps["a"].blk_max_tf = None  # simulate a pre-v2 index
-    tps["a"].blk_min_dl = None
-    import pytest
-
-    with pytest.raises(StatsFreeBoundsUnavailable):
-        wand_topk(tps, n + 5, avg, 5, df_override={"a": tps["a"].df})
-
-
 def test_global_topk_stats_cache_evicts_lru_only():
     # 5 alternating stats keys on a 4-entry cache: eviction must drop the
     # single least-recently-used entry, not wipe the cache (a node serving
